@@ -13,8 +13,8 @@ re-expressed Spark-first:
   snapshot-versioned parquet lake table (mini-Iceberg: atomic manifest
   commits, schema evolution, batch-id idempotence);
 * offsets (``Db2OffsetContext.java:66-80``) become a checkpointed
-  ``(commit_lsn, intent_seq, event_serial_no)`` position plus per-partition
-  lineage rows.
+  ``(commit_lsn, intent_seq, event_serial_no)`` position plus one
+  lineage row per applied batch.
 
 Everything is DataFrame-native; Python touches data only through
 Arrow-vectorized pandas UDFs (never per-row).

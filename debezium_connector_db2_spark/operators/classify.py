@@ -133,12 +133,3 @@ def to_change_events(
         )
     )
 
-
-def flatten_events(events: DataFrame, pk_cols: Sequence[str] = tuple(PK_COLS),
-                   payload_cols: Sequence[str] = tuple(_PAYLOAD)) -> DataFrame:
-    """Envelope -> flat apply rows: PK + payload from after (before for d)."""
-    img = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
-    return events.select(
-        "commit_lsn", "intent_seq", "op", "table", "schema_version",
-        *[img[c].alias(c) for c in payload_cols],
-    )

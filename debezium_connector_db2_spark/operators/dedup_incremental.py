@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from debezium_connector_db2_spark.functions.caching import pin_for_result
 from debezium_connector_db2_spark.functions.text import fingerprint
 from debezium_connector_db2_spark.lake import LakeTable
+from debezium_connector_db2_spark.streaming.checkpoint import create_or_adopt
 
 #: One row per distinct fingerprint ever seen; ``doc_id`` records the
 #: canonical (first-seen) document for provenance/auditing.
@@ -231,19 +232,10 @@ class StreamingDeduper:
         import json
         import os
 
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        path = os.path.join(self.checkpoint_dir, "dedup_base_seq.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                return int(json.load(f)["base_seq"])
-        base = self.dedup.max_registered_seq()
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"base_seq": base}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        return base
+        text = create_or_adopt(
+            os.path.join(self.checkpoint_dir, "dedup_base_seq.json"),
+            lambda: json.dumps({"base_seq": self.dedup.max_registered_seq()}))
+        return int(json.loads(text)["base_seq"])
 
     def _apply(self, batch: DataFrame, epoch_id: int) -> None:
         import os

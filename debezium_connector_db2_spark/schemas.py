@@ -98,7 +98,6 @@ CAPTURE_REGISTRY_SCHEMA = T.StructType(
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("epoch", T.LongType(), False),
-        T.StructField("partition", T.IntegerType(), False),
         T.StructField("max_applied_lsn", T.LongType(), True),
         T.StructField("event_count", T.LongType(), False),
         T.StructField("watermark", T.TimestampType(), True),

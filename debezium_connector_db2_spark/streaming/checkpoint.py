@@ -16,6 +16,7 @@ import json
 import os
 import uuid
 from dataclasses import asdict, dataclass
+from typing import Callable
 
 
 @dataclass
@@ -49,3 +50,32 @@ class Checkpoint:
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, self.file)  # atomic on POSIX
+
+
+def create_or_adopt(path: str, make_value: Callable[[], str]) -> str:
+    """Write-once id file: the first caller creates ``path`` holding
+    ``make_value()``; every caller — racing or later — returns the file's
+    content, so all of them agree on one value.
+
+    The value is written to a private temp file and published with
+    ``os.link``, which, like ``O_CREAT|O_EXCL``, fails if ``path``
+    exists, but makes the file appear already complete: a racing reader
+    never sees it empty.  (A rename would overwrite: the last writer
+    would win, and an early reader could keep a value its peers never
+    see.)
+    """
+    if not os.path.exists(path):
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            f.write(make_value())
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            pass  # a racing caller won: adopt its value
+        finally:
+            os.remove(tmp)
+    with open(path) as f:
+        return f.read().strip()

@@ -9,9 +9,10 @@ Spark rendering of the reference's coordinator + streaming loop
   (the reference's ``determineSnapshotOffset`` handoff point).
 * ``run_available``      — the micro-batch loop (T1/T2): probe max LSN
   (S5), read the LSN interval (S3, partition-pruned), drop already-applied
-  positions (F2/F3), classify + pair (J3/J4), dedup last-writer-wins (A4),
-  MERGE into the lake table (J5) with a deterministic batch id
-  (exactly-once, T4), write per-partition lineage, advance the checkpoint.
+  positions (F2/F3), normalize the capture rows to the target's current
+  shape (``normalize_changes``), dedup last-writer-wins (A4), MERGE into
+  the lake table (J5) with a deterministic batch id (exactly-once, T4),
+  append one lineage row for the batch, advance the checkpoint.
 * schema changes         — applied at their effective LSN by splitting the
   batch at the switch point, mirroring the reference's LSN-ordered schema
   checkpoint queue (``Db2StreamingChangeEventSource.java:119, 241-245,
@@ -38,15 +39,78 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from debezium_connector_db2_spark.lake import LakeTable
-from debezium_connector_db2_spark.operators.classify import (
-    flatten_events,
-    to_change_events,
-)
+from debezium_connector_db2_spark.operators.classify import to_change_events
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
 from debezium_connector_db2_spark.operators.filters import after_position
-from debezium_connector_db2_spark.schemas import PK_COLS
+from debezium_connector_db2_spark.schemas import LINEAGE_SCHEMA, PK_COLS
 from debezium_connector_db2_spark.sources.binlog import BinlogSource
 from debezium_connector_db2_spark.streaming.checkpoint import Checkpoint, Offset
+
+
+def rename_map(target: LakeTable, manifest: dict | None = None) -> dict[str, str]:
+    """Old binlog column -> current target column, composed over the
+    lake's historized ``schema_versions`` (a->b then b->c gives a->c and
+    b->c).  The old capture instance keeps writing the old name until its
+    stop LSN; reads normalize it (Db2StreamingChangeEventSource
+    migrateTable analogue).  Derived from the manifest, so renames applied
+    by a previous process keep normalizing old-instance rows after a
+    restart, the way the reference recovers rename history from its
+    persisted schema-history topic (``Db2DatabaseSchema.java:30-77``),
+    and a ``recover_schema_history`` forgets them."""
+    renames: dict[str, str] = {}
+    for sv in target.schema_versions(manifest):
+        for old, new in sv.renamed.items():
+            for k, v in list(renames.items()):
+                if v == old:
+                    renames[k] = new
+            renames[old] = new
+    # a rename chain back to its start (a->b->a) leaves nothing to map
+    return {old: new for old, new in renames.items() if old != new}
+
+
+def table_rows(raw: DataFrame, table: str, target: LakeTable,
+               manifest: dict | None = None) -> DataFrame:
+    """One table's capture rows (F1) under the target's current column
+    names: a renamed column's old-instance values land in its new name."""
+    df = raw.where(F.col("table") == table)
+    for old, new in rename_map(target, manifest).items():
+        if old in df.columns and new in df.columns:
+            df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
+        elif old in df.columns:
+            df = df.withColumnRenamed(old, new)
+    return df
+
+
+def normalize_changes(raw: DataFrame, table: str, target: LakeTable) -> DataFrame:
+    """Capture rows -> flat apply rows ``(commit_lsn, intent_seq, op,
+    *target columns)`` in the target's current shape — the one step both
+    frontends (``CdcEngine``, ``StreamingCdc``) run before dedup + MERGE.
+
+    F1 table filter and renames (``table_rows``), then alignment: target
+    columns the rows lack (a target-only ADD COLUMN) fill as NULL, and
+    rows written before an ALTER COLUMN widening are up-cast losslessly;
+    binlog columns the target no longer has (DROP COLUMN, filtered
+    columns) are projected away.  ``D`` maps to ``d``, every other opcode
+    to ``c``: a D+I update pair applied as independent rows is
+    final-state-equivalent to the classified ``u`` (J3/J4), because
+    last-writer-wins dedup is op-label-agnostic.
+    """
+    m = target.manifest()
+    df = table_rows(raw, table, target, m)
+    types = dict(df.dtypes)
+    cols = []
+    for f in target.schema(m).fields:
+        if f.name not in types:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+        elif types[f.name] != f.dataType.simpleString():
+            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        else:
+            cols.append(F.col(f.name))
+    return df.select(
+        "commit_lsn", "intent_seq",
+        F.when(F.col("op") == "D", F.lit("d")).otherwise(F.lit("c")).alias("op"),
+        *cols,
+    )
 
 
 @dataclass
@@ -77,8 +141,6 @@ class CdcEngine:
         checkpoint_dir: str,
         table: str = "transcripts",
         pk_cols: Sequence[str] = tuple(PK_COLS),
-        dedup_strategy: str = "agg",
-        classify_mode: str = "fast",
         max_lsns_per_batch: int | None = None,
         schema_changes: Sequence[SchemaChange] = (),
         lineage_dir: str | None = None,
@@ -100,35 +162,9 @@ class CdcEngine:
         self.target = target
         self.table = table
         self.pk_cols = list(pk_cols)
-        self.dedup_strategy = dedup_strategy
-        #: 'full'  — classify + pair-collapse (J3/J4) before applying:
-        #:           produces the canonical event stream, costs one extra
-        #:           shuffle (the per-tx lead/lag window).
-        #: 'fast'  — apply raw capture rows directly: D deletes, I/U/R
-        #:           upsert.  Final-state-equivalent to 'full' because a
-        #:           D+I pair *is* a delete of the old key followed by an
-        #:           insert of the new key, and last-writer-wins dedup is
-        #:           op-label-agnostic.  One shuffle saved per batch.
-        self.classify_mode = classify_mode
         self.max_lsns_per_batch = max_lsns_per_batch
         self.schema_changes = sorted(schema_changes, key=lambda c: c.effective_lsn)
         self.checkpoint = Checkpoint(checkpoint_dir)
-        #: renames applied so far: old binlog column -> current target column
-        #: (the old capture instance keeps writing the old name until its
-        #: stop LSN; reads normalize it, Db2StreamingChangeEventSource
-        #: migrateTable analogue).  Rebuilt from the lake manifest's
-        #: historized schema_versions at init — renames applied by a
-        #: *previous* process must keep normalizing old-instance rows
-        #: after a restart, the way the reference recovers rename history
-        #: from its persisted schema-history topic
-        #: (``Db2DatabaseSchema.java:30-77`` recovery).
-        self.binlog_renames: dict[str, str] = {}
-        for sv in self.target.schema_versions():
-            for old, new in sv.renamed.items():
-                for k, v in list(self.binlog_renames.items()):
-                    if v == old:           # compose chains: a->b then b->c
-                        self.binlog_renames[k] = new
-                self.binlog_renames[old] = new
         self.lineage_dir = lineage_dir or os.path.join(
             os.path.abspath(checkpoint_dir), "lineage"
         )
@@ -260,9 +296,6 @@ class CdcEngine:
                     "run an initial snapshot instead")
             self._notify("Initial Snapshot", "STARTED", {"mode": mode})
             recovered = self.target.recover_schema_history()
-            # rename-normalization state derives from the (now reset)
-            # history: old-instance column names are no longer known
-            self.binlog_renames = {}
             self._notify("Initial Snapshot", "COMPLETED",
                          {"mode": mode,
                           "recovered_columns": [f.name for f in recovered.fields]})
@@ -548,7 +581,6 @@ class CdcEngine:
             self.target.add_column(**change.args)
         elif change.action == "rename_column":
             self.target.rename_column(**change.args)
-            self.binlog_renames[change.args["old"]] = change.args["new"]
         elif change.action == "alter_column":
             # default change / type widening; pre-alter binlog events
             # replayed across the switch LSN are cast to the widened
@@ -562,27 +594,24 @@ class CdcEngine:
         else:
             raise ValueError(f"unknown schema change action {change.action!r}")
 
-    def _normalize_binlog(self, raw: DataFrame) -> DataFrame:
-        """Map old capture-instance column names onto the current schema."""
-        for old, new in self.binlog_renames.items():
-            cols = raw.columns
-            if old in cols and new in cols:
-                raw = raw.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
-            elif old in cols:
-                raw = raw.withColumnRenamed(old, new)
-        return raw
+    @property
+    def binlog_renames(self) -> dict[str, str]:
+        """Old binlog column -> current target column (``rename_map``)."""
+        return rename_map(self.target)
 
     def apply_batch(self, off: Offset, to_lsn: int,
                     write_checkpoint: bool = True,
                     on_batch: Callable[["BatchMetrics"], Any] | None = None,
                     ) -> BatchMetrics:
-        """Classify → dedup → MERGE one LSN interval ``(off.pos, to_lsn]``.
+        """Normalize → dedup → MERGE one LSN interval ``(off.pos, to_lsn]``.
 
-        Job economy (matters at micro-batch cadence): the raw-event stats
-        ride on an ``Observation`` (zero extra jobs), the deduplicated
-        change set is cached and materialized by the MERGE itself, and the
-        per-partition lineage is read off that small cache — two heavy
-        actions per batch total (dedup+prune, write).
+        Job economy (matters at micro-batch cadence): every Spark job a
+        batch submits runs inside ``merge_changes`` — the bucket probe
+        and the write on a copy-on-write target, the delta write alone
+        on a merge-on-read one.  The deduplicated change set is cached
+        and materialized by the MERGE itself; the batch's stats (events
+        read, keys applied, max LSN, watermark) ride on ``Observation``s
+        of that same plan, so the lineage row costs no job.
 
         ``on_batch`` runs *after* the merge commits but *before* the
         checkpoint write: a crash (or hook failure) between the two
@@ -596,9 +625,7 @@ class CdcEngine:
         """
         from pyspark.sql import Observation
 
-        payload_cols = self.payload_cols()
         raw = self.binlog.read_range(off.commit_lsn, to_lsn)
-        raw = raw.where(F.col("table") == self.table)           # F1
         raw = after_position(raw, off.commit_lsn, off.intent_seq)  # F2/F3
         if self.registry is not None:
             from debezium_connector_db2_spark.operators.filters import (
@@ -606,119 +633,69 @@ class CdcEngine:
             )
 
             raw = stop_lsn_filter(raw, self.registry.to_df(self.spark))  # F4
-        raw = self._normalize_binlog(raw)
-
-        # Align raw binlog columns to the current target schema: columns the
-        # binlog doesn't carry yet (pre-evolution events in a post-evolution
-        # read) are filled as NULL by the parquet reader when the source
-        # schema declares them; columns the source schema never declares
-        # (e.g. a target-only ADD COLUMN) are filled here.
-        raw_types = dict(raw.dtypes)
-        for f in self.target.schema().fields:
-            if f.name not in raw.columns:
-                raw = raw.withColumn(f.name, F.lit(None).cast(f.dataType))
-            elif raw_types[f.name] != f.dataType.simpleString():
-                # binlog events written before an ALTER COLUMN widening
-                # carry the old (narrower) type: lossless up-cast
-                raw = raw.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        if self.classify_mode == "full":
-            events = to_change_events(raw, self.pk_cols, payload_cols)
-            flat = flatten_events(events, self.pk_cols, payload_cols)
-        else:
-            # fast path: raw rows are directly applicable (see __init__)
-            flat = raw.select(
-                "commit_lsn", "intent_seq",
-                F.when(F.col("op") == "D", F.lit("d")).otherwise(F.lit("c")).alias("op"),
-                "table", "schema_version", *payload_cols,
-            )
+        flat = normalize_changes(raw, self.table, self.target)
         if self.payload_transform is not None:
             flat = self.payload_transform(flat)          # F7 SMT slot
-        obs = Observation(f"batch-{off.epoch + 1}")
-        flat = flat.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("commit_lsn").alias("max_lsn"),
-            F.max("ts").alias("watermark"),
-        )
-        latest = latest_per_key(
+        read = Observation()
+        flat = flat.observe(read, F.count(F.lit(1)).alias("events"))
+        kept = Observation()
+        changes = latest_per_key(
             flat, self.pk_cols, ("commit_lsn", "intent_seq"),
-            strategy=self.dedup_strategy,
-        )
-        changes = latest.select(
-            *self.pk_cols, "op", "commit_lsn", "intent_seq",
-            *[c for c in payload_cols if c not in self.pk_cols],
+        ).observe(
+            kept,
+            F.count(F.lit(1)).alias("keys"),
+            F.max("commit_lsn").alias("max_lsn"),
+            F.unix_micros(F.max("ts")).alias("watermark"),
         ).persist()
+        epoch = off.epoch + 1
         batch_id = f"cdc-{self.table}-{off.commit_lsn}-{off.intent_seq}-{to_lsn}"
         n_events = n_keys = 0
         try:
             applied = self.target.merge_changes(
                 changes, self.pk_cols, op_col="op", delete_op="d",
                 batch_id=batch_id,
-                summary={"operation": "merge", "epoch": off.epoch + 1,
+                summary={"operation": "merge", "epoch": epoch,
                          "from_lsn": off.commit_lsn, "to_lsn": to_lsn},
             )
-            if applied:  # otherwise no action ran; obs.get would block
-                n_events = obs.get["n_events"]
-                lineage_rows = self._lineage_rows(changes, off.epoch + 1)
-                n_keys = sum(r["event_count"] for r in lineage_rows)
-                self._save_lineage(lineage_rows)
         finally:
             changes.unpersist()
+        if applied:  # otherwise no action ran; Observation.get would block
+            n_events = read.get["events"]
+            stats = kept.get
+            n_keys = stats["keys"]
+            if n_keys:
+                self._save_lineage(epoch, stats["max_lsn"], n_keys,
+                                   stats["watermark"])
 
-        m = BatchMetrics(off.epoch + 1, off.commit_lsn, to_lsn, n_events,
-                         n_keys, applied)
+        m = BatchMetrics(epoch, off.commit_lsn, to_lsn, n_events, n_keys,
+                         applied)
         if on_batch is not None:
             on_batch(m)  # pre-checkpoint: crash here -> batch replays
         if write_checkpoint:
             new_off = Offset(
-                commit_lsn=to_lsn, intent_seq=2**62, epoch=off.epoch + 1,
+                commit_lsn=to_lsn, intent_seq=2**62, epoch=epoch,
                 snapshot_completed=off.snapshot_completed, last_batch_id=batch_id,
             )
             self.checkpoint.write(new_off)
         return m
 
-    def _lineage_rows(self, flat: DataFrame, epoch: int) -> list:
-        """Per-partition lineage: max applied LSN, counts, watermark (the
-        reference's offset map + CAPMON counters, FIXTURES.md §3)."""
-        return (
-            flat.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(
-                F.max("commit_lsn").alias("max_applied_lsn"),
-                F.count(F.lit(1)).alias("event_count"),
-                F.max("ts").alias("watermark"),
-            )
-            .select(
-                F.lit(epoch).cast("long").alias("epoch"),
-                F.col("partition"),
-                "max_applied_lsn", "event_count", "watermark",
-            )
-            .collect()
-        )
-
-    def _save_lineage(self, rows: list) -> None:
-        """Driver-side parquet append — the rows are already collected, so
-        spinning up a Spark job for ~#partitions rows would waste seconds
-        per micro-batch."""
-        if not rows:
-            return
+    def _save_lineage(self, epoch: int, max_applied_lsn: int | None,
+                      event_count: int, watermark_us: int | None) -> None:
+        """Append one ``LINEAGE_SCHEMA`` row — the reference's offset map +
+        CAPMON counters, FIXTURES.md §3 — written directly with pyarrow:
+        a Spark job for one row would cost more than the row is worth."""
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-        table = pa.table(
-            {
-                "epoch": pa.array([r["epoch"] for r in rows], pa.int64()),
-                "partition": pa.array([r["partition"] for r in rows], pa.int32()),
-                "max_applied_lsn": pa.array(
-                    [r["max_applied_lsn"] for r in rows], pa.int64()),
-                "event_count": pa.array([r["event_count"] for r in rows], pa.int64()),
-                "watermark": pa.array(
-                    [r["watermark"] for r in rows], pa.timestamp("us")),
-                "committed_at": pa.array([now] * len(rows), pa.timestamp("us")),
-            }
-        )
+        row = {
+            "epoch": epoch, "max_applied_lsn": max_applied_lsn,
+            "event_count": event_count, "watermark": watermark_us,
+            "committed_at": datetime.datetime.now(datetime.timezone.utc),
+        }
+        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
         os.makedirs(self.lineage_dir, exist_ok=True)
         pq.write_table(
             table,
@@ -809,11 +786,7 @@ class CdcEngine:
         reference emits heartbeat records when no new LSN appears,
         ``Db2StreamingChangeEventSource.java:147-152``)."""
         off = self.checkpoint.read()
-        self._save_lineage([{
-            "epoch": off.epoch, "partition": -1,
-            "max_applied_lsn": off.commit_lsn, "event_count": 0,
-            "watermark": None,
-        }])
+        self._save_lineage(off.epoch, off.commit_lsn, 0, None)
 
     # -- event-feed export (the S11 Kafka-topic analogue) --------------------
 
@@ -862,9 +835,8 @@ class CdcEngine:
         ``Db2StreamingChangeEventSource.java:147-152``).  Costs one
         isEmpty() probe on the feed."""
         payload_cols = self.payload_cols()
-        raw = self.binlog.read_range(from_lsn, to_lsn)
-        raw = raw.where(F.col("table") == self.table)
-        raw = self._normalize_binlog(raw)
+        raw = table_rows(self.binlog.read_range(from_lsn, to_lsn),
+                         self.table, self.target)
         events = to_change_events(raw, self.pk_cols, payload_cols)
         if with_key:
             key_cols = self.record_key_columns()

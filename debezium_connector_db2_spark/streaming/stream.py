@@ -7,7 +7,8 @@ Spark Structured Streaming proper (T1/T2 as a real ``StreamingQuery``):
 * source: parquet file stream over the LSN-bucketed binlog directory
   (``maxFilesPerTrigger`` = admission control, the reference's
   ``max.batch.size``/timespan bounding S6);
-* sink: ``foreachBatch`` running classify-light dedup + MERGE into a
+* sink: ``foreachBatch`` running the engine's batch kernel
+  (``normalize_changes`` → last-writer dedup → MERGE) into a
   **versioned** lake table.  The file source does not guarantee LSN
   ordering across micro-batches, so the sink's per-row
   ``(__commit_lsn, __intent_seq)`` argmax makes application
@@ -22,7 +23,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
@@ -31,6 +32,8 @@ from debezium_connector_db2_spark.schemas import (
     LSN_BUCKET_COL,
     PK_COLS,
 )
+from debezium_connector_db2_spark.streaming.checkpoint import create_or_adopt
+from debezium_connector_db2_spark.streaming.engine import normalize_changes
 
 
 class StreamingCdc:
@@ -72,54 +75,13 @@ class StreamingCdc:
         import os
         import uuid
 
-        path = os.path.join(self.checkpoint_dir, "lake-run-id")
-        if os.path.exists(path):
-            with open(path) as f:
-                return f.read().strip()
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        rid = uuid.uuid4().hex[:12]
-        try:
-            # O_CREAT|O_EXCL: exactly one racing writer creates the file;
-            # everyone else gets EEXIST and adopts that writer's id.  (A
-            # rename would OVERWRITE — last writer wins and an early
-            # re-reader could adopt a different id than its peer, making
-            # two queries on one checkpoint namespace batch ids
-            # differently and defeating the duplicate-apply protection.)
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, rid.encode())
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        except FileExistsError:
-            pass
-        with open(path) as f:
-            return f.read().strip()
+        return create_or_adopt(os.path.join(self.checkpoint_dir, "lake-run-id"),
+                               lambda: uuid.uuid4().hex[:12])
 
     def _apply(self, batch: DataFrame, epoch_id: int) -> None:
-        """Per-micro-batch MERGE.  Schema alignment mirrors the engine's
-        ``_normalize_binlog``: renames recorded in the lake's historized
-        schema_versions map old capture-instance columns onto the current
-        names, and target-only columns fill as NULL."""
-        target_schema = self.target.schema()
-        payload_cols = [f.name for f in target_schema.fields]
-        flat = batch.where(F.col("table") == self.table)
-        for sv in self.target.schema_versions():
-            for old, new in sv.renamed.items():
-                cols = flat.columns
-                if old in cols and new in cols:
-                    flat = flat.withColumn(
-                        new, F.coalesce(F.col(new), F.col(old))).drop(old)
-                elif old in cols:
-                    flat = flat.withColumnRenamed(old, new)
-        for f in target_schema.fields:
-            if f.name not in flat.columns:
-                flat = flat.withColumn(f.name, F.lit(None).cast(f.dataType))
-        flat = flat.select(
-            "commit_lsn", "intent_seq",
-            F.when(F.col("op") == "D", F.lit("d")).otherwise(F.lit("c")).alias("op"),
-            *payload_cols,
-        )
+        """Per-micro-batch MERGE: the engine's normalization, then
+        last-writer dedup."""
+        flat = normalize_changes(batch, self.table, self.target)
         latest = latest_per_key(flat, self.pk_cols, ("commit_lsn", "intent_seq"))
         self.target.merge_changes(
             latest, self.pk_cols, op_col="op", delete_op="d",

@@ -112,6 +112,23 @@ def test_rename_map_rebuilt_after_restart(spark, tmpdir_path):
     assert got[("a", 0)].tool_name == "sed"
 
 
+
+def test_rename_back_to_original_name_keeps_values(spark, tmpdir_path):
+    """A rename chain back to its start (tool -> tool_name -> tool) leaves
+    rows written under ``tool`` nothing to map: their values must survive
+    instead of being coalesced away into a dropped column."""
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=8)
+    src.write(spark.createDataFrame(
+        [_row(1, 0, "I", "a", 0, "t0", tool="bash")[:-1]], BINLOG_SCHEMA))
+    target = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                              TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)
+    target.rename_column("tool", "tool_name")
+    target.rename_column("tool_name", "tool")
+    eng = CdcEngine(spark, src, target, os.path.join(tmpdir_path, "ck"))
+    assert eng.binlog_renames == {"tool_name": "tool"}
+    eng.run_available()
+    assert [r.tool for r in target.read().collect()] == ["bash"]
+
 def test_lake_ddl_idempotent_direct(spark, tmpdir_path):
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                          TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)

@@ -35,20 +35,16 @@ def build_workload(spark, tmp, n_ops=4000, n_convs=200, **kw):
     return snap, binlog, src
 
 
-import pytest
-
-
-@pytest.mark.parametrize("mode", ["full", "fast"])
-def test_replay_matches_oracle(spark, tmpdir_path, mode):
-    """Both apply paths — canonical classify+pair ('full') and direct raw
-    apply ('fast') — must produce the identical final table."""
+def test_replay_matches_oracle(spark, tmpdir_path):
+    """Raw capture rows applied directly (D deletes, everything else
+    upserts; D+I update pairs as two independent rows) must produce the
+    oracle's final table."""
     snap, binlog, src = build_workload(spark, tmpdir_path)
     target = LakeTable.create(
-        spark, os.path.join(tmpdir_path, f"target-{mode}"), TRANSCRIPT_SCHEMA,
+        spark, os.path.join(tmpdir_path, "target"), TRANSCRIPT_SCHEMA,
         bucket_by="conv_id", n_buckets=16,
     )
-    eng = CdcEngine(spark, src, target, os.path.join(tmpdir_path, f"ckpt-{mode}"),
-                    classify_mode=mode)
+    eng = CdcEngine(spark, src, target, os.path.join(tmpdir_path, "ckpt"))
 
     # snapshot phase: here the initial table is the source as-of LSN 0,
     # so stream from the beginning (binlog holds all post-snapshot changes).
@@ -96,8 +92,7 @@ def test_extreme_hot_key_skew(spark, tmpdir_path):
         bucket_by="conv_id", n_buckets=8,
     )
     target.overwrite(snap, batch_id="snapshot")
-    eng = CdcEngine(spark, src, target, os.path.join(tmpdir_path, "ckskew"),
-                    dedup_strategy="salted")
+    eng = CdcEngine(spark, src, target, os.path.join(tmpdir_path, "ckskew"))
     eng.run_available()
     assert_df_equal(target.read(), oracle_final_state(snap, binlog), PK_COLS)
 

@@ -11,7 +11,6 @@ from debezium_connector_db2_spark.operators.classify import (
     OP_UPDATE_AFTER,
     OP_UPDATE_BEFORE,
     classify_opcodes,
-    flatten_events,
     to_change_events,
 )
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
@@ -81,12 +80,6 @@ def test_pk_update_splits_into_delete_plus_insert(spark):
     assert [e.op for e in ev] == ["d", "c"]
     assert ev[0].before.turn_idx == 0 and ev[0].after is None
     assert ev[1].after.turn_idx == 9 and ev[1].before is None
-
-
-def test_flatten_uses_before_for_deletes(spark):
-    df = _binlog(spark, [_row(1, 0, "D", "c", 3, "gone")])
-    flat = flatten_events(to_change_events(df)).collect()[0]
-    assert flat.op == "d" and flat.turn_idx == 3 and flat.text == "gone"
 
 
 def test_dedup_strategies_agree(spark):

@@ -5,6 +5,10 @@ assert no duplicates and no loss in the final table.
 """
 
 import os
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -16,6 +20,7 @@ from debezium_connector_db2_spark.sources.generator import (
     generate_snapshot,
     oracle_final_state,
 )
+from debezium_connector_db2_spark.streaming.checkpoint import create_or_adopt
 from debezium_connector_db2_spark.streaming.engine import CdcEngine, SimulatedCrash
 
 from tests.conftest import assert_df_equal
@@ -102,3 +107,36 @@ def test_rerun_after_completion_is_noop(spark, tmpdir_path):
     assert m["max_applied_lsn"] <= m["checkpoint_lsn"]
     assert m["snapshot_completed"] is False and m["paused"] is False
     assert m["last_epoch"] == m["epoch"]
+
+
+
+def test_create_or_adopt_racing_writers_agree(tmpdir_path):
+    """Write-once ids (the stream sink's run id, the streaming deduper's
+    base seq): N racing first starters with distinct values must all
+    return the one value the file holds — no overwrite, no torn read."""
+    n = 16
+
+    def make(i):
+        time.sleep(0.005)  # widen the window between check and publish
+        return f"value-{i}"
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for attempt in range(5):
+            d = os.path.join(tmpdir_path, f"ck{attempt}")
+            path = os.path.join(d, "id")
+            barrier = threading.Barrier(n)
+
+            def start(i):
+                barrier.wait(timeout=30)
+                return create_or_adopt(path, lambda: make(i))
+
+            with ThreadPoolExecutor(n) as ex:
+                got = list(ex.map(start, range(n), timeout=60))
+            assert len(set(got)) == 1
+            with open(path) as f:
+                assert f.read() == got[0]
+            assert os.listdir(d) == ["id"]   # no temp files left behind
+    finally:
+        sys.setswitchinterval(interval)

@@ -3,7 +3,9 @@
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.schemas import BINLOG_SCHEMA, PK_COLS, TRANSCRIPT_SCHEMA
@@ -13,6 +15,7 @@ from debezium_connector_db2_spark.sources.generator import (
     generate_snapshot,
     oracle_final_state,
 )
+from debezium_connector_db2_spark.streaming.engine import CdcEngine
 from debezium_connector_db2_spark.streaming.stream import StreamingCdc
 
 from tests.conftest import assert_df_equal
@@ -137,25 +140,64 @@ def _px(spark, rows):
     return spark.createDataFrame(rows, BINLOG_SCHEMA)
 
 
-def test_streaming_normalizes_renames_and_added_columns(spark, tmpdir_path):
-    """The Structured Streaming sink must apply the lake's historized
-    renames to old-capture-instance rows and NULL-fill target-only
-    columns, like the native engine path."""
+def _drain_engine(spark, binlog_dir, target, ckpt, schema):
+    src = BinlogSource(spark, binlog_dir, bucket_size=8, schema=schema)
+    CdcEngine(spark, src, target, ckpt).run_available()
+
+
+def _drain_stream(spark, binlog_dir, target, ckpt, schema):
+    StreamingCdc(spark, binlog_dir, target, ckpt, schema=schema).run_available()
+
+
+@pytest.mark.parametrize("drain", [_drain_engine, _drain_stream],
+                         ids=["engine", "stream"])
+def test_streaming_normalizes_renames_and_added_columns(spark, tmpdir_path,
+                                                        drain):
+    """Both frontends run one normalization: the lake's historized renames
+    (a chain tool -> tool_name -> tool_id) map old- and mid-instance rows
+    onto the current name, rows written before an int -> bigint ALTER are
+    up-cast, and target-only columns fill as NULL — identical final state
+    from ``CdcEngine`` and ``StreamingCdc``."""
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                          TRANSCRIPT_SCHEMA, bucket_by="conv_id",
                          n_buckets=2, versioned=True)
+    t.add_column("n", "int")
     t.rename_column("tool", "tool_name")
+    t.rename_column("tool_name", "tool_id")
+    t.alter_column("n", "bigint")
     t.add_column("score", "double", default=0.5)
 
-    rows = [(1, 0, "I", "transcripts", 0, "a", 0, "user", "hello", "bash", TS)]
-    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=8)
-    src.write(_px(spark, rows))       # file still carries old column `tool`
+    # the capture files still carry `tool` (old instance) or `tool_name`
+    # (mid instance), and `n` as int
+    schema = T.StructType(BINLOG_SCHEMA.fields + [
+        T.StructField("tool_name", T.StringType(), True),
+        T.StructField("n", T.IntegerType(), True),
+    ])
 
-    StreamingCdc(spark, os.path.join(tmpdir_path, "bl"), t,
-                 os.path.join(tmpdir_path, "ck")).run_available()
-    row = t.read().collect()[0]
-    assert row.tool_name == "bash"
-    assert row.score is None          # explicit NULL from the new data
+    def row(lsn, op, conv, text, tool, tool_name, n):
+        return (lsn, 0, op, "transcripts", 0, conv, 0, "user", text, tool,
+                TS, tool_name, n)
+
+    rows = [
+        row(1, "I", "a", "hello", "bash", None, 1),
+        row(2, "I", "b", "x", "grep", None, 2),
+        row(3, "U", "a", "hello-v2", None, "sed", 3),
+        row(4, "D", "b", "x", None, "grep", 2),
+        row(5, "I", "c", "c0", None, "awk", 2**31 - 1),
+    ]
+    binlog_dir = os.path.join(tmpdir_path, "bl")
+    BinlogSource(spark, binlog_dir, bucket_size=8).write(
+        spark.createDataFrame(rows, schema))
+
+    drain(spark, binlog_dir, t, os.path.join(tmpdir_path, "ck"), schema)
+    got = t.read()
+    assert got.schema["n"].dataType == T.LongType()
+    assert "tool" not in got.columns and "tool_name" not in got.columns
+    assert {(r.conv_id, r.text, r.tool_id, r.n, r.score)
+            for r in got.collect()} == {
+        ("a", "hello-v2", "sed", 3, None),    # explicit NULL from new data
+        ("c", "c0", "awk", 2**31 - 1, None),
+    }
 
 
 def test_structured_streaming_over_merge_on_read_target(spark, tmpdir_path):
