@@ -9,8 +9,12 @@ subset the engine needs, with the same design shape as Iceberg:
 * **snapshots**: every commit writes an immutable manifest ``v{N}.json``
   listing the data files that make up that version; readers always read an
   explicit file list, never a directory (=> snapshot isolation, time travel);
-* **atomic commit**: the current-version pointer is flipped with an atomic
-  ``os.rename``; a crash mid-commit leaves the previous version intact;
+* **atomic commit**: every data-file write goes through one commit path
+  (``_commit_rows``: one file per bucket, spliced into the parent's file
+  map); the manifest ``v{N}.json`` is written and fsync'd before the
+  current-version pointer flips with an atomic, fsync'd replace
+  (``write_atomic``), so a crash mid-commit leaves the previous version
+  intact and the pointer never names a torn manifest;
 * **manifest-level pruning**: data files are hash-bucketed by a key column
   (``pmod(xxhash64(conv_id), n_buckets)``); MERGE rewrites only the buckets
   the batch touches and carries every untouched file forward by reference
@@ -37,10 +41,12 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterable, Sequence
+from typing import Any, Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
 
 _MANIFEST_DIR = "_manifests"
 _VERSION_PTR = "_VERSION"
@@ -49,7 +55,10 @@ _DATA_DIR = "data"
 DEFAULT_N_BUCKETS = 64
 
 #: Per-row metadata columns of a versioned table (see ``create``).
-VERSION_META_COLS = ["__commit_lsn", "__intent_seq", "__deleted"]
+_VERSION_META_FIELDS = [T.StructField("__commit_lsn", T.LongType(), True),
+                        T.StructField("__intent_seq", T.LongType(), True),
+                        T.StructField("__deleted", T.BooleanType(), True)]
+VERSION_META_COLS = [f.name for f in _VERSION_META_FIELDS]
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -180,18 +189,13 @@ class LakeTable:
 
     def _write_manifest(self, manifest: dict) -> None:
         v = manifest["version"]
-        mpath = os.path.join(self.path, _MANIFEST_DIR, f"v{v}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        # Atomic pointer flip: the commit point.  A crash before the rename
-        # leaves the table at the previous version with v{N}.json orphaned
-        # (harmless); after it, the new version is fully visible.
-        tmp = os.path.join(self.path, _VERSION_PTR + f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, os.path.join(self.path, _VERSION_PTR))
+        write_atomic(os.path.join(self.path, _MANIFEST_DIR, f"v{v}.json"),
+                     json.dumps(manifest))
+        # Atomic pointer flip: the commit point.  The manifest is durable
+        # before it; a crash before the flip leaves the table at the
+        # previous version with v{N}.json orphaned (harmless); after it,
+        # the new version is fully visible.
+        write_atomic(os.path.join(self.path, _VERSION_PTR), str(v))
 
     def history(self) -> list[dict]:
         out = []
@@ -702,20 +706,18 @@ class LakeTable:
         ``__commit_lsn/__intent_seq/__deleted`` metadata columns; the
         default filters tombstones and returns only user columns.
         """
-        m = self.manifest(version)
+        return self._read(self.manifest(version), buckets, raw)
+
+    def _read(self, m: dict, buckets: Iterable[int] | None = None,
+              raw: bool = False) -> DataFrame:
+        """``read`` of the snapshot ``m`` a caller already holds."""
         svs = self.schema_versions(m)
         cur_ver = m["current_schema_version"]
         target = svs[cur_ver].struct
+        cols = [f.name for f in target.fields]
         versioned = m.get("versioned", False)
-        meta_fields = (
-            [T.StructField("__commit_lsn", T.LongType(), True),
-             T.StructField("__intent_seq", T.LongType(), True),
-             T.StructField("__deleted", T.BooleanType(), True)]
-            if versioned else []
-        )
-        out_cols = [f.name for f in target.fields] + (
-            VERSION_META_COLS if versioned and raw else []
-        )
+        meta_fields = _VERSION_META_FIELDS if versioned else []
+        out_cols = cols + (VERSION_META_COLS if versioned and raw else [])
 
         want = None if buckets is None else {int(b) for b in buckets}
         by_schema: dict[int, list[str]] = {}
@@ -732,9 +734,7 @@ class LakeTable:
                 [], T.StructType(list(target.fields) + (meta_fields if raw else []))
             )
 
-        inner_cols = [f.name for f in target.fields] + (
-            VERSION_META_COLS if versioned else []
-        )
+        inner_cols = cols + (VERSION_META_COLS if versioned else [])
         parts = []
         for sv, paths in sorted(by_schema.items()):
             fschema = T.StructType(list(svs[sv].struct.fields) + meta_fields)
@@ -769,20 +769,20 @@ class LakeTable:
             # the key — the read-side half of the MoR tradeoff (writes
             # became O(changes)); compact() folds deltas so steady-state
             # reads pay it over one file per bucket.
-            out = self._resolve_latest(out, m["key_cols"], target)
+            out = self._resolve_latest(out, m["key_cols"], cols)
         if versioned and not raw:
             out = out.where(~F.coalesce(F.col("__deleted"), F.lit(False)))
         return out.select(out_cols)
 
-    def _resolve_latest(self, df: DataFrame, key_cols: Sequence[str],
-                        target: T.StructType) -> DataFrame:
-        """Per-key last-writer resolution over base + delta rows
-        (merge-on-read): argmax on ``(__commit_lsn, __intent_seq)``.
-        Exact position ties (impossible from a correct engine, possible
-        from hand-written deltas) break deterministically on the
-        remaining struct fields."""
-        data_cols = [f.name for f in target.fields if f.name not in key_cols]
-        ordered = ["__commit_lsn", "__intent_seq", "__deleted"] + data_cols
+    @staticmethod
+    def _resolve_latest(df: DataFrame, key_cols: Sequence[str],
+                        cols: Sequence[str]) -> DataFrame:
+        """Per-key last-writer resolution over versioned rows: argmax on
+        ``(__commit_lsn, __intent_seq)``.  Shared by the merge-on-read
+        read and the versioned copy-on-write MERGE.  Exact position ties
+        (impossible from a correct engine, possible from hand-written
+        deltas) break deterministically on the remaining struct fields."""
+        ordered = VERSION_META_COLS + [c for c in cols if c not in key_cols]
         return (
             df.groupBy(*key_cols)
             .agg(F.max(F.struct(*ordered)).alias("__w"))
@@ -792,56 +792,66 @@ class LakeTable:
 
     # -- write paths --------------------------------------------------------
 
-    def _write_files(self, df: DataFrame, schema_version: int) -> dict[int, list[dict]]:
-        """Write df (already carrying ``__bucket``) as one file per bucket.
+    def _stored(self, df: DataFrame, m: dict,
+                position: tuple[int, int] | None = None) -> DataFrame:
+        """``df`` as stored under manifest ``m``: the current schema's
+        columns, the version metadata on a versioned table (stamped with
+        ``position`` when given, else taken from ``df``), and
+        ``__bucket``."""
+        meta = []
+        if m.get("versioned", False):
+            meta = VERSION_META_COLS if position is None else [
+                F.lit(position[0]).cast("long").alias("__commit_lsn"),
+                F.lit(position[1]).cast("long").alias("__intent_seq"),
+                F.lit(False).alias("__deleted")]
+        return df.select(*[f.name for f in self.schema(m).fields], *meta,
+                         bucket_expr(m["bucket_by"], m["n_buckets"])
+                         .alias("__bucket"))
 
-        Returns {bucket: [file-entry]}.  ``repartition("__bucket")`` gives
-        each bucket exactly one output partition => one parquet file per
-        bucket per commit (bounded file counts; at cluster scale you'd raise
-        files-per-bucket via a second split key).
+    def _commit_rows(self, m: dict, rows: DataFrame,
+                     summary: dict | Callable[[dict], dict],
+                     batch_id: str | None = None,
+                     replace: Sequence[int] | None = None) -> None:
+        """The one data commit: write ``rows`` (from ``_stored``) as one
+        parquet file per bucket, splice them into ``m``'s file map and
+        commit ``m`` as its child.  The new files replace those of the
+        buckets in ``replace`` (every bucket when None) and are appended
+        to the others.  ``summary`` may be a function of the written
+        ``{bucket: [file-entry]}`` map.
+
+        ``repartition(n_buckets, "__bucket")`` gives each bucket exactly
+        one output partition => one file per bucket per commit (bounded
+        file counts; at cluster scale you'd raise files-per-bucket via a
+        second split key).  The exchange is sized by the table's own
+        bucket count instead of ``spark.sql.shuffle.partitions`` plus an
+        AQE re-coalesce round (measured ~0.1 s per micro-batch commit at
+        local scale; at cluster scale n_buckets IS the write parallelism
+        a bucketed table wants).
         """
-        commit_id = uuid.uuid4().hex[:12]
-        staging_rel = os.path.join(_DATA_DIR, f"commit-{commit_id}")
+        staging_rel = os.path.join(_DATA_DIR, f"commit-{uuid.uuid4().hex[:12]}")
         staging = os.path.join(self.path, staging_rel)
-        # explicit partition count = the table's bucket count: every
-        # __bucket value still lands in exactly one partition (hash mod
-        # N), but the exchange is sized by the table's own granularity
-        # knob instead of spark.sql.shuffle.partitions + an AQE
-        # re-coalesce round (measured ~0.1 s per micro-batch commit at
-        # local scale; at cluster scale n_buckets IS the write
-        # parallelism a bucketed table wants)
-        n_parts = max(int(self.manifest()["n_buckets"]), 1)
         (
-            df.repartition(n_parts, "__bucket")
+            rows.repartition(max(int(m["n_buckets"]), 1), "__bucket")
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(staging)
         )
-        out: dict[int, list[dict]] = {}
+        written: dict[int, list[dict]] = {}
         for d in os.listdir(staging):
             if not d.startswith("__bucket="):
                 continue
-            b = int(d.split("=", 1)[1])
             for fn in os.listdir(os.path.join(staging, d)):
                 if fn.endswith(".parquet"):
-                    out.setdefault(b, []).append(
+                    written.setdefault(int(d.split("=", 1)[1]), []).append(
                         {"path": os.path.join(staging_rel, d, fn),
-                         "schema_version": schema_version}
-                    )
-        return out
-
-    def _with_bucket(self, df: DataFrame, m: dict) -> DataFrame:
-        return df.withColumn("__bucket", bucket_expr(m["bucket_by"], m["n_buckets"]))
-
-    def _with_meta_defaults(self, df: DataFrame, m: dict,
-                            position: tuple[int, int] = (0, 0)) -> DataFrame:
-        if not m.get("versioned", False):
-            return df
-        return (
-            df.withColumn("__commit_lsn", F.lit(position[0]).cast("long"))
-            .withColumn("__intent_seq", F.lit(position[1]).cast("long"))
-            .withColumn("__deleted", F.lit(False))
-        )
+                         "schema_version": m["current_schema_version"]})
+        files = {} if replace is None else {
+            b: ents for b, ents in m["files"].items() if int(b) not in replace}
+        for b, ents in written.items():
+            files[str(b)] = files.get(str(b), []) + ents
+        m["files"] = files
+        self._commit_child(m, summary(written) if callable(summary) else summary,
+                           batch_id)
 
     def overwrite(self, df: DataFrame, batch_id: str | None = None,
                   summary: dict | None = None,
@@ -853,13 +863,8 @@ class LakeTable:
         m = self.manifest()
         if batch_id is not None and batch_id in m["committed_batch_ids"]:
             return
-        cols = [f.name for f in self.schema(m).fields]
-        out = self._with_meta_defaults(df.select(cols), m, position)
-        files = self._write_files(
-            self._with_bucket(out, m), m["current_schema_version"]
-        )
-        m["files"] = {str(b): ents for b, ents in files.items()}
-        self._commit_child(m, summary or {"operation": "overwrite"}, batch_id)
+        self._commit_rows(m, self._stored(df, m, position),
+                          summary or {"operation": "overwrite"}, batch_id)
 
     def append(self, df: DataFrame, batch_id: str | None = None,
                summary: dict | None = None,
@@ -867,17 +872,9 @@ class LakeTable:
         m = self.manifest()
         if batch_id is not None and batch_id in m["committed_batch_ids"]:
             return
-        cols = [f.name for f in self.schema(m).fields]
-        out = self._with_meta_defaults(df.select(cols), m, position)
-        new_files = self._write_files(
-            self._with_bucket(out, m), m["current_schema_version"]
-        )
-        files = {b: list(ents) for b, ents in m["files"].items()}
-        for b, ents in new_files.items():
-            files.setdefault(str(b), [])
-            files[str(b)] = files[str(b)] + ents
-        m["files"] = files
-        self._commit_child(m, summary or {"operation": "append"}, batch_id)
+        self._commit_rows(m, self._stored(df, m, position),
+                          summary or {"operation": "append"}, batch_id,
+                          replace=())
 
     # -- MERGE (the J5 sink kernel) -----------------------------------------
 
@@ -912,8 +909,15 @@ class LakeTable:
         if batch_id is not None and batch_id in m["committed_batch_ids"]:
             return False
         cols = [f.name for f in self.schema(m).fields]
-
-        ch = self._with_bucket(changes, m)
+        versioned = m.get("versioned", False)
+        if versioned:
+            # change rows as versioned rows: their position, and deletes
+            # as tombstones
+            incoming = changes.select(
+                *cols,
+                F.col("commit_lsn").alias("__commit_lsn"),
+                F.col("intent_seq").alias("__intent_seq"),
+                (F.col(op_col) == delete_op).alias("__deleted"))
 
         if m.get("merge_mode", "cow") == "mor":
             if list(key_cols) != list(m["key_cols"]):
@@ -930,89 +934,47 @@ class LakeTable:
             # to the batch, no read of existing data, no rewrite, no
             # driver-side probes.  Resolution happens on read
             # (_resolve_latest); compact() folds deltas into the base.
-            incoming = ch.select(
-                *[F.col(k) for k in key_cols],
-                F.col("commit_lsn").alias("__commit_lsn"),
-                F.col("intent_seq").alias("__intent_seq"),
-                (F.col(op_col) == delete_op).alias("__deleted"),
-                *[F.col(c) for c in cols if c not in key_cols],
-                F.col("__bucket"),
-            )
-            new_files = self._write_files(
-                incoming.select(*cols, *VERSION_META_COLS, "__bucket"),
-                m["current_schema_version"])
-            files = {b: list(ents) for b, ents in m["files"].items()}
-            for b, ents in new_files.items():
-                files[str(b)] = files.get(str(b), []) + ents
-            m["files"] = files
-            self._commit_child(
-                m, summary or {"operation": "merge-delta",
-                               "delta_buckets": len(new_files)}, batch_id)
+            self._commit_rows(
+                m, self._stored(incoming, m),
+                summary or (lambda written: {"operation": "merge-delta",
+                                             "delta_buckets": len(written)}),
+                batch_id, replace=())
             return True
 
         # Manifest-level pruning: which buckets does this batch touch?
         # Bounded by n_buckets, so the collect is tiny.
-        touched = [r["__bucket"] for r in ch.select("__bucket").distinct().collect()]
+        touched = [r["__bucket"] for r in changes.select(
+            bucket_expr(m["bucket_by"], m["n_buckets"]).alias("__bucket")
+        ).distinct().collect()]
         if not touched:
             self._commit_child(dict(m), summary or {"operation": "merge", "empty": True},
                                batch_id)
             return True
 
-        if m.get("versioned", False):
+        old = self._read(m, buckets=touched, raw=versioned)
+        if versioned:
             # Order-insensitive path: per-key argmax over (old rows ∪
             # changes) on (__commit_lsn, __intent_seq); deletes become
             # retained tombstone rows.  Safe under out-of-order batch
             # delivery (e.g. a file-stream source), at the cost of
             # storing tombstones until vacuum.
-            old = self._with_bucket(self.read(buckets=touched, raw=True), m)
-            incoming = ch.select(
-                *[F.col(k) for k in key_cols], F.col("__bucket"),
-                F.col("commit_lsn").alias("__commit_lsn"),
-                F.col("intent_seq").alias("__intent_seq"),
-                (F.col(op_col) == delete_op).alias("__deleted"),
-                *[F.col(c) for c in cols if c not in key_cols],
-            )
-            ordered_fields = (["__commit_lsn", "__intent_seq", "__deleted", "__bucket"]
-                              + [c for c in cols if c not in key_cols])
-            merged = (
-                old.select(*key_cols, *ordered_fields)
-                .unionByName(incoming.select(*key_cols, *ordered_fields))
-                .groupBy(*key_cols)
-                .agg(F.max(F.struct(*ordered_fields)).alias("__w"))
-                .select(*key_cols,
-                        *[F.col("__w")[c].alias(c) for c in ordered_fields])
-            )
-            new_rows = merged.select(*cols, *VERSION_META_COLS, "__bucket")
+            new_rows = self._resolve_latest(old.unionByName(incoming),
+                                            key_cols, cols)
         else:
-            old = self._with_bucket(self.read(buckets=touched), m)
-
-            keyed = ch.select(
-                *[F.col(k) for k in key_cols], F.col("__bucket"),
-                F.col(op_col).alias("__op"),
-                *[F.col(c) for c in cols if c not in key_cols],
-            )
             # Survivors: target rows whose key does NOT appear in the batch.
             # ``changes`` carries ≤1 row per key (A4 dedup ran upstream), so
             # no distinct is needed; AQE converts this to a broadcast
             # anti-join when the key set is small.
             survivors = old.join(
-                keyed.select(*key_cols), on=list(key_cols), how="left_anti"
+                changes.select(*key_cols), on=list(key_cols), how="left_anti"
             )
-            upserts = keyed.where(F.col("__op") != delete_op).drop("__op")
-            new_rows = survivors.select(*cols, "__bucket").unionByName(
-                upserts.select(*cols, "__bucket")
-            )
-
-        new_files = self._write_files(new_rows, m["current_schema_version"])
-        files = {b: list(ents) for b, ents in m["files"].items() if int(b) not in set(touched)}
-        for b, ents in new_files.items():
-            files[str(b)] = ents
-        m["files"] = files
-        self._commit_child(
-            m, summary or {"operation": "merge", "touched_buckets": len(touched)}, batch_id
-        )
+            new_rows = survivors.unionByName(
+                changes.where(F.col(op_col) != delete_op).select(*cols))
+        self._commit_rows(
+            m, self._stored(new_rows, m),
+            summary or {"operation": "merge", "touched_buckets": len(touched)},
+            batch_id, replace=touched)
         return True
-
 
     def compact(self, max_files_per_bucket: int = 1) -> int:
         """Rewrite buckets whose file count exceeds the threshold (appends
@@ -1025,18 +987,9 @@ class LakeTable:
                 if len(ents) > max_files_per_bucket]
         if not over:
             return 0
-        cols = [f.name for f in self.schema(m).fields]
-        extra = VERSION_META_COLS if m.get("versioned", False) else []
-        rows = self._with_bucket(
-            self.read(buckets=over, raw=m.get("versioned", False)), m
-        ).select(*cols, *extra, "__bucket")
-        new_files = self._write_files(rows, m["current_schema_version"])
-        files = {b: list(ents) for b, ents in m["files"].items()
-                 if int(b) not in set(over)}
-        for b, ents in new_files.items():
-            files[str(b)] = ents
-        m["files"] = files
-        self._commit_child(m, {"operation": "compact", "buckets": len(over)})
+        self._commit_rows(m, self._stored(self._read(m, over, raw=True), m),
+                          {"operation": "compact", "buckets": len(over)},
+                          replace=over)
         return len(over)
 
     def rebucket(self, n_buckets: int) -> None:
@@ -1052,16 +1005,10 @@ class LakeTable:
         m = self.manifest()
         if n_buckets == m["n_buckets"]:
             return
-        cols = [f.name for f in self.schema(m).fields]
-        extra = VERSION_META_COLS if m.get("versioned", False) else []
-        rows = self.read(raw=m.get("versioned", False)).withColumn(
-            "__bucket", bucket_expr(m["bucket_by"], n_buckets)
-        ).select(*cols, *extra, "__bucket")
-        new_files = self._write_files(rows, m["current_schema_version"])
+        rows = self._read(m, raw=True)
         m["n_buckets"] = n_buckets
-        m["files"] = {str(b): ents for b, ents in new_files.items()}
-        self._commit_child(m, {"operation": "rebucket",
-                               "n_buckets": n_buckets})
+        self._commit_rows(m, self._stored(rows, m),
+                          {"operation": "rebucket", "n_buckets": n_buckets})
 
     def vacuum_tombstones(self, before_lsn: int) -> None:
         """Physically drop tombstone rows older than ``before_lsn`` (safe
@@ -1070,17 +1017,12 @@ class LakeTable:
         m = self.manifest()
         if not m.get("versioned", False):
             return
-        cols = [f.name for f in self.schema(m).fields]
-        kept = self.read(raw=True).where(
+        kept = self._read(m, raw=True).where(
             ~F.col("__deleted") | (F.col("__commit_lsn") >= before_lsn)
         )
-        files = self._write_files(
-            self._with_bucket(kept, m).select(*cols, *VERSION_META_COLS, "__bucket"),
-            m["current_schema_version"],
-        )
-        m["files"] = {str(b): ents for b, ents in files.items()}
-        self._commit_child(m, {"operation": "vacuum-tombstones",
-                               "before_lsn": before_lsn})
+        self._commit_rows(m, self._stored(kept, m),
+                          {"operation": "vacuum-tombstones",
+                           "before_lsn": before_lsn})
 
 
 def _is_widening(old: T.DataType, new: T.DataType) -> bool:

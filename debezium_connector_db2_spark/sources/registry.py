@@ -7,21 +7,21 @@ reverses it, and schema changes appear as a *second* capture instance for
 the same source table with a start LSN, the old instance getting a stop
 LSN (``Db2StreamingChangeEventSource.java:350-412``).
 
-Here the registry is a small driver-side JSON manifest (atomic rename on
-write) exposing the same operations, plus the S7/S8 scans as DataFrames
-for the F4 stop-LSN filter.
+Here the registry is a small driver-side JSON manifest (durable atomic
+replace on write) exposing the same operations, plus the S7/S8 scans as
+DataFrames for the F4 stop-LSN filter.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from debezium_connector_db2_spark.schemas import CAPTURE_REGISTRY_SCHEMA
+from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
 
 
 class CaptureRegistry:
@@ -38,10 +38,7 @@ class CaptureRegistry:
 
     def _write(self, entries: list[dict]) -> None:
         os.makedirs(os.path.dirname(self.file) or ".", exist_ok=True)
-        tmp = f"{self.file}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(entries, f, indent=1)
-        os.rename(tmp, self.file)
+        write_atomic(self.file, json.dumps(entries, indent=1))
 
     # -- X2 / X3: register & deregister -------------------------------------
 

@@ -1,6 +1,6 @@
 """Resumable offset checkpoint — the reference's offset map
 (``Db2OffsetContext.java:66-80``: commit_lsn + change_lsn + event_serial_no)
-rendered as an atomically-replaced JSON file.
+rendered as an atomically-replaced JSON file (``write_atomic``).
 
 The position is ``(commit_lsn, intent_seq)`` — exact, so restart filtering
 (F2/F3) is a tuple compare rather than a serial-number replay count.
@@ -44,12 +44,39 @@ class Checkpoint:
             return Offset(**json.load(f))
 
     def write(self, offset: Offset) -> None:
-        tmp = os.path.join(self.dir, f".offset.{uuid.uuid4().hex}.tmp")
+        write_atomic(self.file, json.dumps(asdict(offset)))
+
+
+def _durable_temp(path: str, text: str) -> str:
+    """Write ``text`` to a fresh hidden temp file next to ``path`` and
+    fsync it; returns the temp path.  Same directory, so publishing it
+    under ``path`` is a rename or link within one file system."""
+    head, name = os.path.split(os.path.abspath(path))
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
         with open(tmp, "w") as f:
-            json.dump(asdict(offset), f)
+            f.write(text)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, self.file)  # atomic on POSIX
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return tmp
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Durably replace ``path`` with ``text``: readers see the old
+    content or the new, never a torn file, and the new bytes are on disk
+    before the name points at them.  The one writer of every small state
+    file (offsets, manifests and the version pointer, registry, signals,
+    consumer-group offsets)."""
+    tmp = _durable_temp(path, text)
+    try:
+        os.replace(tmp, path)  # atomic on POSIX
+    except BaseException:
+        os.remove(tmp)
+        raise
 
 
 def create_or_adopt(path: str, make_value: Callable[[], str]) -> str:
@@ -66,11 +93,7 @@ def create_or_adopt(path: str, make_value: Callable[[], str]) -> str:
     """
     if not os.path.exists(path):
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            f.write(make_value())
-            f.flush()
-            os.fsync(f.fileno())
+        tmp = _durable_temp(path, make_value())
         try:
             os.link(tmp, path)
         except FileExistsError:

@@ -44,7 +44,11 @@ from debezium_connector_db2_spark.operators.dedup import latest_per_key
 from debezium_connector_db2_spark.operators.filters import after_position
 from debezium_connector_db2_spark.schemas import LINEAGE_SCHEMA, PK_COLS
 from debezium_connector_db2_spark.sources.binlog import BinlogSource
-from debezium_connector_db2_spark.streaming.checkpoint import Checkpoint, Offset
+from debezium_connector_db2_spark.streaming.checkpoint import (
+    Checkpoint,
+    Offset,
+    write_atomic,
+)
 
 
 def rename_map(target: LakeTable, manifest: dict | None = None) -> dict[str, str]:
@@ -452,12 +456,8 @@ class CdcEngine:
 
     def _mark_signal_done(self, done: set[str]) -> None:
         import json
-        import uuid as _uuid
 
-        tmp = f"{self._signals_done_file}.{_uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(done), f)
-        os.rename(tmp, self._signals_done_file)
+        write_atomic(self._signals_done_file, json.dumps(sorted(done)))
 
     def process_signals(self) -> int:
         """Consume pending signals in send order; returns how many ran.

@@ -44,6 +44,8 @@ import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
+from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
+
 
 def committed_frontier(offset_dirs) -> int:
     """The minimum committed LSN across every consumer-group manifest in
@@ -120,12 +122,152 @@ def _parquet_rows(path: str) -> int:
     return total
 
 
-class FeedPublisher:
+def _publish_segment(feed_dir: str, seg: str, df: DataFrame,
+                     keep=None) -> str | None:
+    """Write ``df`` as segment ``seg`` of ``feed_dir``: staged to a
+    dot-prefixed temp dir (invisible to Spark's reader) and atomically
+    renamed in, so a segment is all or nothing.  When ``keep(tmp)`` is
+    false the staged write is discarded instead; returns the segment
+    path, or None if discarded."""
+    tmp = os.path.join(feed_dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
+    df.write.mode("overwrite").parquet(tmp)
+    if keep is not None and not keep(tmp):
+        shutil.rmtree(tmp, ignore_errors=True)
+        return None
+    final = os.path.join(feed_dir, seg)
+    os.rename(tmp, final)
+    return final
+
+
+class _SegmentLog:
+    """An LSN-ordered log of parquet segment directories
+    ``{prefix}...-{from}-{to}``, each holding the disjoint range
+    ``(from, to]``: listing, suffix reads, consumers and retention,
+    shared by both publishers.  Subclasses set ``prefix``; ``_order``
+    is the segment sort key."""
+
+    prefix: str
+
+    def __init__(self, spark, feed_dir: str):
+        self.spark = spark
+        self.dir = os.path.abspath(feed_dir)
+        os.makedirs(self.dir, exist_ok=True)
+
+    @staticmethod
+    def _order(name: str):
+        return name
+
+    def segments(self, from_lsn: int | None = None) -> list[str]:
+        """Published segment paths in feed order, optionally pruned to
+        those whose encoded LSN range can contain events at or after
+        ``from_lsn``."""
+        segs = sorted((d for d in os.listdir(self.dir)
+                       if d.startswith(self.prefix)), key=self._order)
+        if from_lsn is not None:
+            segs = [d for d in segs if int(d.rsplit("-", 1)[1]) >= from_lsn]
+        return [os.path.join(self.dir, d) for d in segs]
+
+    def published_to(self) -> int:
+        """Highest LSN covered by a published segment (0 if none) — the
+        frontier a :class:`FeedConsumer` can poll up to."""
+        return max((int(d.rsplit("-", 1)[1]) for d in os.listdir(self.dir)
+                    if d.startswith(self.prefix)), default=0)
+
+    def read(self, from_lsn: int | None = None,
+             ordered: bool = True) -> DataFrame:
+        """The published feed in commit order; with ``from_lsn`` only
+        events with ``commit_lsn >= from_lsn``, reading only the
+        segments whose path-encoded range overlaps (the rest are never
+        listed — a consumer resuming near the head of a 10^10-event feed
+        scans a handful of tail segments, not the history).
+        ``ordered=False`` skips the total (commit_lsn, intent_seq) sort
+        for consumers that re-order downstream anyway.
+
+        **Cost note:** ``ordered=True`` ends in a global sort over
+        whatever matched — fine for a suffix read (a handful of tail
+        segments), but a *full-history* read of a large feed becomes a
+        total sort of the topic; for that case use
+        :meth:`read_segmented`, which exploits segment disjointness to
+        avoid the exchange entirely, or pass ``ordered=False`` and
+        order per partition downstream."""
+        segs = self.segments(from_lsn)
+        if not segs:
+            raise ValueError(f"feed {self.dir} has no published segments"
+                             + (f" at or after lsn {from_lsn}"
+                                if from_lsn is not None else ""))
+        df = self.spark.read.parquet(*segs)
+        if from_lsn is not None:
+            df = df.where(F.col("commit_lsn") >= from_lsn)
+        return df.orderBy("commit_lsn", "intent_seq") if ordered else df
+
+    def read_segmented(self, from_lsn: int | None = None):
+        """Ordered full-history consumption WITHOUT the total sort.
+
+        Published segments hold disjoint half-open LSN ranges in
+        path-ordered sequence, so the feed's global ``(commit_lsn,
+        intent_seq)`` order factorizes: segment order × within-segment
+        order.  This yields ``(segment_path, DataFrame)`` pairs in feed
+        order, each frame sorted within its own segment — every sort is
+        bounded by one segment's size and NO cross-segment exchange
+        ever happens, the way a Kafka consumer drains partitions in
+        offset order rather than sorting the topic.  Drain pattern::
+
+            for seg, df in feed.read_segmented():
+                apply(df)          # rows of df are ordered; segments
+                                   # arrive in global order
+        """
+        for seg in self.segments(from_lsn):
+            df = self.spark.read.parquet(seg)
+            if from_lsn is not None:
+                df = df.where(F.col("commit_lsn") >= from_lsn)
+            yield seg, df.orderBy("commit_lsn", "intent_seq")
+
+    def consumer(self, offset_dir: str, group: str = "default"
+                 ) -> "FeedConsumer":
+        """A committed-offset consumer over this feed (see
+        :class:`FeedConsumer`)."""
+        return FeedConsumer(self, offset_dir, group=group)
+
+    def prune(self, upto_lsn: int | None = None,
+              offset_dirs=None) -> int:
+        """Feed retention: remove published segments every consumer
+        group has committed past — without it a 10^10-event deployment's
+        feed directory grows without bound (the reference's downstream,
+        Kafka, has topic retention; this is the analogous cycle, with
+        the consumer-group offset manifests as the prune frontier).
+
+        ``offset_dirs`` lists the offset directories of every known
+        consumer group; the frontier is the **min** committed LSN across
+        all their manifests (:func:`committed_frontier`), so a lagging
+        group keeps its unread segments.  An explicit ``upto_lsn`` caps
+        (or, alone, sets) the frontier — the operator override for a
+        decommissioned group.  The newest segment is always retained
+        (``published_to`` recovery).  Returns segments removed.
+
+        A group added *after* a prune starts past the pruned history —
+        the same contract as a new Kafka consumer on a retention-pruned
+        topic.
+        """
+        frontier = _retention_upto(upto_lsn, offset_dirs)
+        if frontier <= 0:
+            return 0
+        return self._prune_below(frontier)
+
+    def _prune_below(self, frontier: int) -> int:
+        return _prune_segments(self.dir, self.prefix, frontier)
+
+
+class FeedPublisher(_SegmentLog):
+    """Per-table feed: segment ``seg-{epoch:08d}-{from}-{to}`` holds one
+    applied batch's events."""
+
+    prefix = "seg-"
+
     def __init__(self, engine, feed_dir: str, tombstones: bool = True,
                  transaction_block: bool = False, heartbeats: bool = False,
                  **envelope_kwargs):
+        super().__init__(engine.spark, feed_dir)
         self.engine = engine
-        self.dir = os.path.abspath(feed_dir)
         self.tombstones = tombstones
         self.transaction_block = transaction_block
         #: publish empty batches as heartbeat records on the sibling
@@ -136,7 +278,6 @@ class FeedPublisher:
         self.heartbeats = heartbeats
         self.hb_dir = self.dir + "-heartbeats"
         self.envelope_kwargs = envelope_kwargs
-        os.makedirs(self.dir, exist_ok=True)
 
     def _heartbeat(self, m) -> str | None:
         if not self.heartbeats:
@@ -146,14 +287,11 @@ class FeedPublisher:
         final = os.path.join(self.hb_dir, seg)
         if os.path.exists(final):
             return None
-        hb = self.engine.spark.range(1).selectExpr(
+        hb = self.spark.range(1).selectExpr(
             f"CAST({m.epoch} AS LONG) AS epoch",
             f"CAST({m.to_lsn} AS LONG) AS lsn",
             "'h' AS op")
-        tmp = os.path.join(self.hb_dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
-        hb.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-        return final
+        return _publish_segment(self.hb_dir, seg, hb.coalesce(1))
 
     def publish(self, m) -> str | None:
         """Publish one applied batch's envelope records; engine
@@ -180,115 +318,16 @@ class FeedPublisher:
             transaction_block=self.transaction_block,
             **self.envelope_kwargs,
         )
-        tmp = os.path.join(self.dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(tmp)
-        if _parquet_rows(tmp) == 0:
-            # replay of an interval that truly held no events (e.g. the
-            # crashed batch itself was empty) — footer-metadata check,
-            # no extra Spark job
-            shutil.rmtree(tmp, ignore_errors=True)
-            return self._heartbeat(m)
-        os.rename(tmp, final)
-        return final
+        # a replay of an interval that truly held no events (e.g. the
+        # crashed batch itself was empty) is discarded — footer-metadata
+        # check, no extra Spark job
+        return (_publish_segment(self.dir, seg, df,
+                                 keep=lambda tmp: _parquet_rows(tmp) > 0)
+                or self._heartbeat(m))
 
-    def segments(self, from_lsn: int | None = None) -> list[str]:
-        """Published segment paths, optionally pruned to those whose
-        encoded LSN range can contain events at or after ``from_lsn``
-        (segment ``seg-{epoch}-{from}-{to}`` holds ``(from, to]``)."""
-        segs = sorted(
-            d for d in os.listdir(self.dir) if d.startswith("seg-")
-        )
-        if from_lsn is not None:
-            segs = [d for d in segs if int(d.rsplit("-", 1)[1]) >= from_lsn]
-        return [os.path.join(self.dir, d) for d in segs]
-
-    def published_to(self) -> int:
-        """Highest LSN covered by a published segment (0 if none) — the
-        frontier a :class:`FeedConsumer` can poll up to."""
-        return max((int(d.rsplit("-", 1)[1]) for d in os.listdir(self.dir)
-                    if d.startswith("seg-")), default=0)
-
-    def read(self, from_lsn: int | None = None,
-             ordered: bool = True) -> DataFrame:
-        """The published feed; with ``from_lsn`` only events with
-        ``commit_lsn >= from_lsn``, reading only the segments whose
-        path-encoded range overlaps (the rest are never listed — a
-        consumer resuming near the head of a 10^10-event feed scans a
-        handful of tail segments, not the history).  ``ordered=False``
-        skips the total (commit_lsn, intent_seq) sort for consumers that
-        re-order downstream anyway.
-
-        **Cost note:** ``ordered=True`` ends in a global sort over
-        whatever matched — fine for a suffix read (a handful of tail
-        segments), but a *full-history* read of a large feed becomes a
-        total sort of the topic; for that case use
-        :meth:`read_segmented`, which exploits segment disjointness to
-        avoid the exchange entirely, or pass ``ordered=False`` and
-        order per partition downstream."""
-        segs = self.segments(from_lsn)
-        if not segs:
-            raise ValueError(f"feed {self.dir} has no published segments"
-                             + (f" at or after lsn {from_lsn}"
-                                if from_lsn is not None else ""))
-        df = self.engine.spark.read.parquet(*segs)
-        if from_lsn is not None:
-            df = df.where(F.col("commit_lsn") >= from_lsn)
-        return df.orderBy("commit_lsn", "intent_seq") if ordered else df
-
-    def read_segmented(self, from_lsn: int | None = None):
-        """Ordered full-history consumption WITHOUT the total sort.
-
-        Published segments hold disjoint half-open LSN ranges
-        (``seg-{epoch}-{from}-{to}`` holds ``(from, to]``) in
-        path-sortable order, so the feed's global ``(commit_lsn,
-        intent_seq)`` order factorizes: segment order × within-segment
-        order.  This yields ``(segment_path, DataFrame)`` pairs in feed
-        order, each frame sorted within its own segment — every sort is
-        bounded by one segment's size and NO cross-segment exchange
-        ever happens, the way a Kafka consumer drains partitions in
-        offset order rather than sorting the topic.  Drain pattern::
-
-            for seg, df in feed.read_segmented():
-                apply(df)          # rows of df are ordered; segments
-                                   # arrive in global order
-        """
-        for seg in self.segments(from_lsn):
-            df = self.engine.spark.read.parquet(seg)
-            if from_lsn is not None:
-                df = df.where(F.col("commit_lsn") >= from_lsn)
-            yield seg, df.orderBy("commit_lsn", "intent_seq")
-
-    def consumer(self, offset_dir: str, group: str = "default"
-                 ) -> "FeedConsumer":
-        """A committed-offset consumer over this feed (see
-        :class:`FeedConsumer`)."""
-        return FeedConsumer(self, offset_dir, group=group)
-
-    def prune(self, upto_lsn: int | None = None,
-              offset_dirs=None) -> int:
-        """Feed retention: remove published segments every consumer
-        group has committed past — without it a 10^10-event deployment's
-        feed directory grows without bound (the reference's downstream,
-        Kafka, has topic retention; this is the analogous cycle, with
-        the consumer-group offset manifests as the prune frontier).
-
-        ``offset_dirs`` lists the offset directories of every known
-        consumer group; the frontier is the **min** committed LSN across
-        all their manifests (:func:`committed_frontier`), so a lagging
-        group keeps its unread segments.  An explicit ``upto_lsn`` caps
-        (or, alone, sets) the frontier — the operator override for a
-        decommissioned group.  The newest segment is always retained
-        (``published_to`` recovery).  Heartbeat segments below the
-        frontier are pruned too.  Returns segments removed.
-
-        A group added *after* a prune starts past the pruned history —
-        the same contract as a new Kafka consumer on a retention-pruned
-        topic.
-        """
-        frontier = _retention_upto(upto_lsn, offset_dirs)
-        if frontier <= 0:
-            return 0
-        removed = _prune_segments(self.dir, "seg-", frontier)
+    def _prune_below(self, frontier: int) -> int:
+        # heartbeat segments below the frontier go too
+        removed = super()._prune_below(frontier)
         if os.path.isdir(self.hb_dir):
             removed += _prune_segments(self.hb_dir, "hb-", frontier)
         return removed
@@ -301,7 +340,7 @@ class FeedPublisher:
         ) if os.path.isdir(self.hb_dir) else []
         if not segs:
             raise ValueError(f"{self.hb_dir} has no heartbeat segments")
-        return self.engine.spark.read.parquet(*segs).orderBy("epoch")
+        return self.spark.read.parquet(*segs).orderBy("epoch")
 
 
 class FeedConsumer:
@@ -310,8 +349,8 @@ class FeedConsumer:
 
     The reference's consumers get this from Kafka's consumer-group
     offset commits; here the group's committed LSN lives in a one-line
-    JSON manifest (``<offset_dir>/<group>.json``) written atomically
-    (temp + rename), and the read→process→commit loop is::
+    JSON manifest (``<offset_dir>/<group>.json``) written with
+    ``write_atomic``, and the read→process→commit loop is::
 
         c = pub.consumer(offset_dir, group="indexer")
         batch = c.poll()                  # None when caught up
@@ -376,7 +415,7 @@ class FeedConsumer:
 
     def commit(self, to_lsn: int | None = None) -> None:
         """Atomically record the group's frontier: the last ``poll``'s
-        ``to_lsn`` (or an explicit one).  Temp-file + rename, so a crash
+        ``to_lsn`` (or an explicit one).  ``write_atomic``, so a crash
         mid-commit leaves the previous offset intact — the manifest is
         either the old frontier or the new one, never torn."""
         import json
@@ -388,14 +427,12 @@ class FeedConsumer:
             raise ValueError(
                 f"commit {to_lsn} would move the offset backwards "
                 f"(committed {self.committed()})")
-        tmp = self._path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"group": self.group, "commit_lsn": int(to_lsn)}, f)
-        os.replace(tmp, self._path)
+        write_atomic(self._path, json.dumps(
+            {"group": self.group, "commit_lsn": int(to_lsn)}))
         self._pending_to = None
 
 
-class MultiFeedPublisher:
+class MultiFeedPublisher(_SegmentLog):
     """One transaction-ordered topic across all tables of a shared
     binlog — the cross-table counterpart of :class:`FeedPublisher`.
 
@@ -420,8 +457,10 @@ class MultiFeedPublisher:
     Intervals are contiguous: every drained interval is written (an
     interval with no events across all tables becomes an empty segment)
     so the watermark always advances and a consumer's union of segments
-    is gap-free.
+    is gap-free.  Segment ``mseg-{from}-{to}`` holds ``(from, to]``.
     """
+
+    prefix = "mseg-"
 
     def __init__(self, engines: dict, feed_dir: str,
                  tombstones: bool = True, transaction_block: bool = True,
@@ -429,15 +468,17 @@ class MultiFeedPublisher:
         if not engines:
             raise ValueError("MultiFeedPublisher needs at least one engine")
         self.engines = dict(engines)
-        self.dir = os.path.abspath(feed_dir)
+        super().__init__(next(iter(self.engines.values())).spark, feed_dir)
         self.tombstones = tombstones
         self.transaction_block = transaction_block
         self.envelope_kwargs = envelope_kwargs
-        self.spark = next(iter(self.engines.values())).spark
         #: in-memory applied positions (ahead of checkpoints inside the
         #: pre-checkpoint hook window); checkpoints are the floor
         self._applied: dict[str, int] = {}
-        os.makedirs(self.dir, exist_ok=True)
+
+    @staticmethod
+    def _order(name: str):
+        return int(name.split("-")[1])
 
     def hook_for(self, table: str):
         """The ``on_batch`` hook for ``engines[table]``::
@@ -476,11 +517,6 @@ class MultiFeedPublisher:
             # _watermark).
             self.heartbeat(name, eng.checkpoint.read().commit_lsn or 0)
         return self.drain()
-
-    def published_to(self) -> int:
-        """Highest LSN covered by a published segment (0 if none)."""
-        return max((int(d.rsplit("-", 1)[1]) for d in os.listdir(self.dir)
-                    if d.startswith("mseg-")), default=0)
 
     def prune_binlog(self) -> int:
         """Drop fully-consumed buckets from the shared binlog: prune
@@ -528,63 +564,4 @@ class MultiFeedPublisher:
             transaction_block=self.transaction_block,
             **self.envelope_kwargs,
         )
-        tmp = os.path.join(self.dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-        return [final]
-
-    def segments(self, from_lsn: int | None = None) -> list[str]:
-        def key(d):
-            return int(d.split("-")[1])
-        segs = sorted((d for d in os.listdir(self.dir)
-                       if d.startswith("mseg-")), key=key)
-        if from_lsn is not None:
-            # mseg-{from}-{to} holds (from, to]
-            segs = [d for d in segs if int(d.rsplit("-", 1)[1]) >= from_lsn]
-        return [os.path.join(self.dir, d) for d in segs]
-
-    def read(self, from_lsn: int | None = None,
-             ordered: bool = True) -> DataFrame:
-        """The cross-table feed in commit order: (commit_lsn,
-        intent_seq) is a total order across tables on a shared binlog.
-        ``from_lsn`` prunes segments by their path-encoded range before
-        Spark lists a file (same suffix-read contract as
-        :meth:`FeedPublisher.read`; the same ``ordered=True``
-        full-history total-sort cost note applies)."""
-        segs = self.segments(from_lsn)
-        if not segs:
-            raise ValueError(f"feed {self.dir} has no published segments"
-                             + (f" at or after lsn {from_lsn}"
-                                if from_lsn is not None else ""))
-        df = self.spark.read.parquet(*segs)
-        if from_lsn is not None:
-            df = df.where(F.col("commit_lsn") >= from_lsn)
-        return df.orderBy("commit_lsn", "intent_seq") if ordered else df
-
-    def read_segmented(self, from_lsn: int | None = None):
-        """Segment-wise ordered drain of the cross-table feed — same
-        no-total-sort contract as :meth:`FeedPublisher.read_segmented`
-        (``mseg-{from}-{to}`` ranges are disjoint and path-ordered)."""
-        for seg in self.segments(from_lsn):
-            df = self.spark.read.parquet(seg)
-            if from_lsn is not None:
-                df = df.where(F.col("commit_lsn") >= from_lsn)
-            yield seg, df.orderBy("commit_lsn", "intent_seq")
-
-    def consumer(self, offset_dir: str, group: str = "default"
-                 ) -> "FeedConsumer":
-        """A committed-offset consumer over the cross-table feed —
-        :class:`FeedConsumer` only needs ``published_to`` and a pruning
-        ``read``, which both publishers share."""
-        return FeedConsumer(self, offset_dir, group=group)
-
-    def prune(self, upto_lsn: int | None = None,
-              offset_dirs=None) -> int:
-        """Cross-table feed retention — same contract as
-        :meth:`FeedPublisher.prune`: remove segments every consumer
-        group has committed past (min across ``offset_dirs`` manifests,
-        optionally capped by ``upto_lsn``), never the newest segment."""
-        frontier = _retention_upto(upto_lsn, offset_dirs)
-        if frontier <= 0:
-            return 0
-        return _prune_segments(self.dir, "mseg-", frontier)
+        return [_publish_segment(self.dir, seg, df)]

@@ -33,6 +33,8 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
+from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
+
 
 @dataclass
 class Signal:
@@ -52,10 +54,8 @@ class SignalChannel:
         seq = len([f for f in os.listdir(self.dir) if f.startswith("sig-")])
         sid = f"{seq:08d}-{uuid.uuid4().hex[:8]}"
         payload = {"id": sid, "type": type, "data": data or {}}
-        tmp = os.path.join(self.dir, f".sig-{sid}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.rename(tmp, os.path.join(self.dir, f"sig-{sid}.json"))
+        write_atomic(os.path.join(self.dir, f"sig-{sid}.json"),
+                     json.dumps(payload))
         return sid
 
     def poll(self) -> list[Signal]:

@@ -27,23 +27,31 @@ def _jobs_in_group(sc, group):
     return set(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
-def test_apply_batch_jobs_all_start_inside_merge(spark, tmpdir_path,
-                                                 monkeypatch, merge_mode):
+def _snapshotted_engine(spark, tmpdir_path, merge_mode, versioned):
+    """A snapshotted table and an engine with one batch of changes
+    pending; returns (snapshot, binlog, engine)."""
     snap = generate_snapshot(spark, n_convs=20, turns_per_conv=4, seed=3)
     binlog = generate_binlog(spark, n_ops=200, n_convs=20, turns_per_conv=4,
                              seed=3)
     src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"),
                        bucket_size=1 << 16)
     src.write(binlog)
-    mor = merge_mode == "mor"
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                          TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=4,
-                         versioned=mor, merge_mode=merge_mode,
-                         key_cols=PK_COLS if mor else None)
+                         versioned=versioned, merge_mode=merge_mode,
+                         key_cols=PK_COLS if merge_mode == "mor" else None)
     t.overwrite(snap, batch_id="snapshot")
-    eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"))
-    off, hi = eng.checkpoint.read(), src.max_lsn()
+    return snap, binlog, CdcEngine(spark, src, t,
+                                   os.path.join(tmpdir_path, "ck"))
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_apply_batch_jobs_all_start_inside_merge(spark, tmpdir_path,
+                                                 monkeypatch, merge_mode):
+    snap, binlog, eng = _snapshotted_engine(spark, tmpdir_path, merge_mode,
+                                            versioned=merge_mode == "mor")
+    t = eng.target
+    off, hi = eng.checkpoint.read(), eng.binlog.max_lsn()
 
     sc = spark.sparkContext
     outside, inside = f"apply-{merge_mode}", f"merge-{merge_mode}"
@@ -73,3 +81,38 @@ def test_apply_batch_jobs_all_start_inside_merge(spark, tmpdir_path,
     assert [(r.epoch, r.event_count) for r in lin] == [(1, m.keys)]
     assert lin[0].max_applied_lsn == hi
     assert eng.metrics()["events_applied"] == m.keys
+
+
+@pytest.mark.parametrize("merge_mode,versioned", [
+    ("cow", False), ("cow", True), ("mor", True)],
+    ids=["cow", "cow_versioned", "mor"])
+def test_merge_reads_the_manifest_once(spark, tmpdir_path, monkeypatch,
+                                       merge_mode, versioned):
+    """A MERGE works from the one manifest it reads up front: the
+    touched-bucket read and the commit reuse it."""
+    snap, binlog, eng = _snapshotted_engine(spark, tmpdir_path, merge_mode,
+                                            versioned)
+
+    reads, inside = [], [False]
+    manifest, merge = LakeTable.manifest, LakeTable.merge_changes
+
+    def counted_manifest(self, *args, **kwargs):
+        if inside[0]:
+            reads.append(args)
+        return manifest(self, *args, **kwargs)
+
+    def flagged_merge(self, *args, **kwargs):
+        inside[0] = True
+        try:
+            return merge(self, *args, **kwargs)
+        finally:
+            inside[0] = False
+
+    monkeypatch.setattr(LakeTable, "manifest", counted_manifest)
+    monkeypatch.setattr(LakeTable, "merge_changes", flagged_merge)
+    m = eng.apply_batch(eng.checkpoint.read(), eng.binlog.max_lsn())
+
+    assert m.applied and m.events > 0
+    assert len(reads) == 1
+    assert_df_equal(eng.target.read(), oracle_final_state(snap, binlog),
+                    PK_COLS)

@@ -4,6 +4,8 @@ the engine between the sink commit and the checkpoint write, resume, and
 assert no duplicates and no loss in the final table.
 """
 
+import builtins
+import errno
 import os
 import sys
 import threading
@@ -140,3 +142,79 @@ def test_create_or_adopt_racing_writers_agree(tmpdir_path):
             assert os.listdir(d) == ["id"]   # no temp files left behind
     finally:
         sys.setswitchinterval(interval)
+
+
+def test_torn_manifest_write_leaves_previous_version(spark, tmpdir_path,
+                                                     monkeypatch):
+    """A manifest write that fails partway (disk full, crash) leaves no
+    partial ``v{N+1}.json`` and the table still reads version N: the
+    manifest is staged under a temp name and only published whole."""
+    snap = generate_snapshot(spark, n_convs=20, turns_per_conv=4, seed=13)
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=4)
+    t.overwrite(snap, batch_id="snapshot")
+    v = t.current_version()
+    mdir = os.path.join(t.path, "_manifests")
+    real_open = builtins.open
+
+    class Torn:
+        """Write handle that keeps half of the first write, then fails."""
+
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, text):
+            self.f.write(text[:len(text) // 2])
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def __getattr__(self, name):
+            return getattr(self.f, name)
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        f = real_open(path, mode, *args, **kwargs)
+        in_mdir = os.path.dirname(os.path.abspath(path)) == mdir
+        return Torn(f) if "w" in mode and in_mdir else f
+
+    with monkeypatch.context() as mp:
+        mp.setattr(builtins, "open", torn_open)
+        with pytest.raises(OSError):
+            t.overwrite(snap.limit(5), batch_id="torn")
+
+    assert sorted(os.listdir(mdir)) == sorted(f"v{i}.json" for i in range(v + 1))
+    fresh = LakeTable.load(spark, t.path)
+    assert fresh.current_version() == v
+    assert not fresh.has_batch("torn")
+    assert_df_equal(fresh.read(), snap, PK_COLS)
+    # the retried commit lands as the next version
+    fresh.overwrite(snap.limit(5), batch_id="torn")
+    assert fresh.current_version() == v + 1 and fresh.read().count() == 5
+
+
+def test_manifest_is_durable_before_version_pointer_flips(tmpdir_path,
+                                                          monkeypatch):
+    """Commit order: the manifest bytes are fsync'd and published under
+    ``v{N+1}.json``, then the fsync'd ``_VERSION`` pointer replaces the
+    old one — the pointer never names bytes that are not on disk."""
+    t = LakeTable.create(None, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id")
+    synced, published = set(), []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        real_fsync(fd)
+        synced.add(os.fstat(fd).st_ino)
+
+    def replace(src, dst):
+        published.append((os.path.basename(dst), os.stat(src).st_ino in synced))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    t.add_column("score", "double")
+    assert published == [("v1.json", True), ("_VERSION", True)]

@@ -36,13 +36,27 @@ def _changes(spark, rows):
     )
 
 
-def test_versioned_merge_out_of_order_batches(spark, tmpdir_path):
-    """Applying batch B2 (newer) before B1 (older) must converge to the
-    same state as in-order application — per-row version metadata wins."""
-    t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPT_SCHEMA,
-        bucket_by="conv_id", n_buckets=4, versioned=True,
+def _versioned_table(spark, path, merge_mode, n_buckets):
+    mor = merge_mode == "mor"
+    return LakeTable.create(
+        spark, path, TRANSCRIPT_SCHEMA, bucket_by="conv_id",
+        n_buckets=n_buckets, versioned=True, merge_mode=merge_mode,
+        key_cols=PK_COLS if mor else None,
     )
+
+
+def _raw_rows(t):
+    return {(r.conv_id, r.turn_idx, r.text, r["__commit_lsn"], r["__deleted"])
+            for r in t.read(raw=True).collect()}
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_versioned_merge_out_of_order_batches(spark, tmpdir_path, merge_mode):
+    """Applying batch B2 (newer) before B1 (older) must converge to the
+    same state as in-order application — per-row version metadata wins.
+    Copy-on-write resolves at MERGE time, merge-on-read at read time;
+    both give the same rows, tombstones included."""
+    t = _versioned_table(spark, os.path.join(tmpdir_path, "t"), merge_mode, 4)
     b1 = _changes(spark, [
         _row(1, 0, "I", "a", 0, "v1"),
         _row(2, 0, "I", "b", 0, "w1"),
@@ -61,25 +75,27 @@ def test_versioned_merge_out_of_order_batches(spark, tmpdir_path):
     assert got == {("a", 0): "v2", ("c", 0): "alive"}  # b deleted, c resurrected later
 
     # tombstone rows retained physically until vacuum
-    raw = t.read(raw=True)
-    assert raw.where("__deleted").count() == 1
+    assert _raw_rows(t) == {("a", 0, "v2", 10, False),
+                            ("b", 0, "w1", 11, True),
+                            ("c", 0, "alive", 12, False)}
     t.vacuum_tombstones(before_lsn=100)
-    assert t.read(raw=True).where("__deleted").count() == 0
+    assert _raw_rows(t) == {("a", 0, "v2", 10, False),
+                            ("c", 0, "alive", 12, False)}
     got2 = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
     assert got2 == got
 
 
-def test_versioned_delete_not_resurrected_by_late_old_update(spark, tmpdir_path):
-    t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "t2"), TRANSCRIPT_SCHEMA,
-        bucket_by="conv_id", n_buckets=2, versioned=True,
-    )
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_versioned_delete_not_resurrected_by_late_old_update(
+        spark, tmpdir_path, merge_mode):
+    t = _versioned_table(spark, os.path.join(tmpdir_path, "t2"), merge_mode, 2)
     t.merge_changes(_changes(spark, [_row(5, 0, "D", "x", 0, "dead")]),
                     PK_COLS, batch_id="del")
     # a LATE, OLDER update must not resurrect the deleted key
     t.merge_changes(_changes(spark, [_row(2, 0, "U", "x", 0, "zombie")]),
                     PK_COLS, batch_id="late")
     assert t.read().count() == 0
+    assert _raw_rows(t) == {("x", 0, "dead", 5, True)}
 
 
 def test_structured_streaming_replay(spark, tmpdir_path):
