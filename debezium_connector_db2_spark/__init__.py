@@ -6,15 +6,17 @@ re-expressed Spark-first:
 
 * the reference's serial k-way-merge streaming loop
   (``Db2StreamingChangeEventSource.java:114-308``) becomes a data-parallel
-  micro-batch pipeline: LSN-range scan -> opcode classification (lead/lag)
-  -> update pairing -> per-key last-writer-wins dedup -> MERGE into a
-  versioned lake table;
+  micro-batch pipeline: LSN-range scan -> normalization
+  (``normalize_changes``) -> per-key last-writer-wins dedup -> MERGE into a
+  versioned lake table (opcode classification and update pairing serve
+  only the exported event feed: a D+I pair applied independently reaches
+  the same final state);
 * the Kafka topic sink becomes an idempotent ``MERGE INTO`` against a
   snapshot-versioned parquet lake table (mini-Iceberg: atomic manifest
   commits, schema evolution, batch-id idempotence);
 * offsets (``Db2OffsetContext.java:66-80``) become a checkpointed
-  ``(commit_lsn, intent_seq, event_serial_no)`` position plus one
-  lineage row per applied batch.
+  ``(commit_lsn, intent_seq)`` position plus epoch and last batch id,
+  and one lineage row per applied batch.
 
 Everything is DataFrame-native; Python touches data only through
 Arrow-vectorized pandas UDFs (never per-row).

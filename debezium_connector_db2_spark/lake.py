@@ -457,6 +457,19 @@ class LakeTable:
         self._write_manifest(m2)
         return struct
 
+    def _commit_schema(self, m: dict, schema: T.StructType, summary: dict,
+                       added: dict | None = None, renamed: dict | None = None,
+                       **change) -> None:
+        """Commit ``schema`` as the next schema version: the one step
+        every metadata-only DDL ends with.  ``change`` carries the
+        version's ``dropped`` / ``altered`` entry, if any."""
+        ver = m["current_schema_version"] + 1
+        m["schema_versions"].append(
+            {"version": ver, "schema_json": schema.jsonValue(),
+             "added": added or {}, "renamed": renamed or {}, **change})
+        m["current_schema_version"] = ver
+        self._commit_child(m, summary)
+
     def add_column(self, name: str, dtype: str, default: Any = None) -> None:
         """ADD COLUMN (metadata-only, like Iceberg).
 
@@ -487,13 +500,9 @@ class LakeTable:
 
             default = parse_default_value(dtype, default)
         new_schema = T.StructType(list(cur.fields) + [T.StructField(name, _parse_type(dtype), True)])
-        ver = m["current_schema_version"] + 1
-        m["schema_versions"].append(
-            {"version": ver, "schema_json": new_schema.jsonValue(),
-             "added": {name: default}, "renamed": {}}
-        )
-        m["current_schema_version"] = ver
-        self._commit_child(m, {"operation": "add-column", "column": name})
+        self._commit_schema(m, new_schema,
+                            {"operation": "add-column", "column": name},
+                            added={name: default})
 
     def rename_column(self, old: str, new: str) -> None:
         """RENAME COLUMN (metadata-only).  Idempotent like ``add_column``:
@@ -512,17 +521,13 @@ class LakeTable:
             [T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
              for f in cur.fields]
         )
-        ver = m["current_schema_version"] + 1
-        m["schema_versions"].append(
-            {"version": ver, "schema_json": new_schema.jsonValue(),
-             "added": {}, "renamed": {old: new}}
-        )
-        m["current_schema_version"] = ver
         # merge-on-read resolution identity follows the rename (old delta
         # files are upgraded to the new name on read before resolution)
         if m.get("key_cols") and old in m["key_cols"]:
             m["key_cols"] = [new if k == old else k for k in m["key_cols"]]
-        self._commit_child(m, {"operation": "rename-column", "from": old, "to": new})
+        self._commit_schema(m, new_schema,
+                            {"operation": "rename-column", "from": old, "to": new},
+                            renamed={old: new})
 
     def drop_column(self, name: str) -> None:
         """DROP COLUMN (metadata-only, like Iceberg): the column leaves
@@ -558,13 +563,9 @@ class LakeTable:
                 f"cannot drop {name!r}: it is the bucket key or part of "
                 f"the merge-on-read key_cols {sorted(protected)}")
         new_schema = T.StructType([f for f in cur.fields if f.name != name])
-        ver = m["current_schema_version"] + 1
-        m["schema_versions"].append(
-            {"version": ver, "schema_json": new_schema.jsonValue(),
-             "added": {}, "renamed": {}, "dropped": [name]}
-        )
-        m["current_schema_version"] = ver
-        self._commit_child(m, {"operation": "drop-column", "column": name})
+        self._commit_schema(m, new_schema,
+                            {"operation": "drop-column", "column": name},
+                            dropped=[name])
 
     _ALTER_UNSET = object()
 
@@ -640,14 +641,10 @@ class LakeTable:
             [T.StructField(name, new_type, f.nullable) if f.name == name
              else f for f in cur.fields]
         )
-        ver = m["current_schema_version"] + 1
-        m["schema_versions"].append(
-            {"version": ver, "schema_json": new_schema.jsonValue(),
-             "added": {}, "renamed": {}, "altered": {name: delta}}
-        )
-        m["current_schema_version"] = ver
-        self._commit_child(m, {"operation": "alter-column", "column": name,
-                               **{k: str(v) for k, v in delta.items()}})
+        self._commit_schema(m, new_schema,
+                            {"operation": "alter-column", "column": name,
+                             **{k: str(v) for k, v in delta.items()}},
+                            altered={name: delta})
 
     def column_default(self, name: str,
                        manifest: dict | None = None) -> Any:

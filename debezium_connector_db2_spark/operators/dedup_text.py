@@ -22,11 +22,15 @@ DuckDB oracles reproduce them bit-for-bit.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
 
 from debezium_connector_db2_spark.functions.caching import pin_for_result
 from debezium_connector_db2_spark.functions.hashing import h60, seeded
 from debezium_connector_db2_spark.functions.text import fingerprint, word_shingles
+
+_log = logging.getLogger(__name__)
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -354,15 +358,13 @@ def minhash_lsh_pairs_over(
                 .select("band", "bucket"))
         buckets = buckets.join(keep, ["band", "bucket"], "left_semi")
         if drop_stats is not None:
-            import logging
-
             over = (counts.where(F.col("__bn") > max_band_bucket_size)
                     .agg(F.count(F.lit(1)).alias("b"),
                          F.sum("__bn").alias("r")).collect()[0])
             drop_stats["dropped_buckets"] = over["b"]
             drop_stats["dropped_rows"] = over["r"] or 0
             if over["b"]:
-                logging.getLogger(__name__).warning(
+                _log.warning(
                     "minhash_lsh_pairs: %d band buckets over cap %d "
                     "excluded (%d doc-band rows)", over["b"],
                     max_band_bucket_size, over["r"])
@@ -484,8 +486,6 @@ def simhash_pairs(
                 .select("chunk", "cval"))
         cdf = cdf.join(keep, ["chunk", "cval"], "left_semi")
         if drop_stats is not None:
-            import logging
-
             # Same aggregation tree as `keep`, filtered the other way —
             # collected eagerly (bounded: one summary row).  Running it
             # here populates the persisted fps cache, so the caller's
@@ -498,7 +498,7 @@ def simhash_pairs(
             drop_stats["dropped_buckets"] = over["b"]
             drop_stats["dropped_rows"] = over["r"] or 0
             if over["b"]:
-                logging.getLogger(__name__).warning(
+                _log.warning(
                     "simhash_pairs: %d chunk buckets over cap %d excluded "
                     "(%d doc-chunk rows)", over["b"], max_bucket_size,
                     over["r"])

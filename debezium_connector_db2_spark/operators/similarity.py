@@ -12,11 +12,14 @@
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from debezium_connector_db2_spark.functions.hashing import seeded
+
+_log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -590,8 +593,6 @@ def semdedup(
                       .select("cell"))
         pairable = ranked.join(keep_cells, "cell", "left_semi")
         if drop_stats is not None:
-            import logging
-
             over = (counts.agg(
                 F.count(F.when(F.col("__cn") > max_cell_size, 1))
                 .alias("c"),
@@ -602,7 +603,7 @@ def semdedup(
             drop_stats["dropped_rows"] = int(over["r"] or 0)
             drop_stats["max_cell_seen"] = int(over["m"] or 0)
             if over["c"]:
-                logging.getLogger(__name__).warning(
+                _log.warning(
                     "semdedup: %d cells over cap %d excluded from "
                     "pairwise (%d rows keep by default)", over["c"],
                     max_cell_size, over["r"])

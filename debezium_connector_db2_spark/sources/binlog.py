@@ -4,24 +4,36 @@ Plays the role of the Db2 capture tables.  Layout::
 
     <dir>/lsn_bucket=<commit_lsn // bucket_size>/part-*.parquet
 
-so an LSN-interval scan (the reference's indexed
+``BinlogSource`` owns this layout: ``_buckets`` is the one place that
+parses the directory names, and ``_scan`` reads exactly the named bucket
+directories.  Every read goes through the two, so the max-LSN probe and
+an LSN-interval scan (the reference's indexed
 ``WHERE IBMSNAP_COMMITSEQ BETWEEN ? AND ?`` range scan,
-``LuwPlatform.java:29-39``) becomes partition-pruned: Spark reads only the
-buckets overlapping the interval.  At 100 TB this is the difference
-between scanning the whole log per micro-batch and scanning one slice.
+``LuwPlatform.java:29-39``) touch only the buckets they need — they never
+list the whole log, whose listing becomes a Spark job of its own past 32
+bucket directories.  At 100 TB this is the difference between scanning
+the whole log per micro-batch and scanning one slice.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from debezium_connector_db2_spark.schemas import (
     BINLOG_SCHEMA,
     DEFAULT_LSN_BUCKET_SIZE,
     LSN_BUCKET_COL,
 )
+
+
+def read_schema(schema: T.StructType) -> T.StructType:
+    """The event schema plus the ``lsn_bucket`` partition column — what a
+    batch or streaming read of the binlog directory yields."""
+    return T.StructType(
+        list(schema.fields) + [T.StructField(LSN_BUCKET_COL, T.LongType(), True)])
 
 
 class BinlogSource:
@@ -46,20 +58,48 @@ class BinlogSource:
             .parquet(self.path)
         )
 
-    def read(self) -> DataFrame:
-        from pyspark.sql import types as T
+    def _bucket_dir(self, b: int) -> str:
+        return os.path.join(self.path, f"{LSN_BUCKET_COL}={b}")
 
-        schema = T.StructType(
-            list(self.schema.fields) + [T.StructField(LSN_BUCKET_COL, T.LongType(), True)]
-        )
-        return self.spark.read.schema(schema).parquet(self.path)
+    def _buckets(self) -> list[int]:
+        """Sorted ids of the bucket directories on disk; [] for a missing
+        log.  A plain directory listing — no Spark job."""
+        if not os.path.isdir(self.path):
+            return []
+        prefix = f"{LSN_BUCKET_COL}="
+        return sorted(int(d[len(prefix):]) for d in os.listdir(self.path)
+                      if d.startswith(prefix))
+
+    def _scan(self, buckets: list[int]) -> DataFrame:
+        """Read exactly the named bucket directories (``lsn_bucket`` stays a
+        partition column via ``basePath``); no bucket -> an empty frame
+        with the same schema."""
+        schema = read_schema(self.schema)
+        if not buckets:
+            return self.spark.createDataFrame([], schema)
+        return (self.spark.read.schema(schema).option("basePath", self.path)
+                .parquet(*(self._bucket_dir(b) for b in buckets)))
+
+    def _lsn_agg(self, buckets: list[int], agg, *preds) -> int | None:
+        """One aggregate over ``commit_lsn`` in ``buckets`` — None, with no
+        Spark job, when there is no bucket to read."""
+        if not buckets:
+            return None
+        df = self._scan(buckets)
+        for p in preds:
+            df = df.where(p)
+        return df.agg(agg("commit_lsn").alias("m")).collect()[0]["m"]
+
+    def read(self) -> DataFrame:
+        return self._scan(self._buckets())
 
     def read_range(self, from_lsn: int, to_lsn: int) -> DataFrame:
-        """Closed-interval scan with both partition pruning (lsn_bucket
-        predicate) and row-group skipping (commit_lsn min/max stats)."""
+        """Closed-interval scan with both partition pruning (only the
+        overlapping bucket directories, plus the lsn_bucket predicate)
+        and row-group skipping (commit_lsn min/max stats)."""
         lo_b = from_lsn // self.bucket_size
         hi_b = to_lsn // self.bucket_size
-        return self.read().where(
+        return self._scan([b for b in self._buckets() if lo_b <= b <= hi_b]).where(
             (F.col(LSN_BUCKET_COL) >= lo_b) & (F.col(LSN_BUCKET_COL) <= hi_b)
             & (F.col("commit_lsn") >= from_lsn) & (F.col("commit_lsn") <= to_lsn)
         ).drop(LSN_BUCKET_COL)
@@ -69,43 +109,17 @@ class BinlogSource:
         engine fast-forward over LSN gaps instead of scanning empty
         micro-batch ranges.
 
-        One pruned scan over a geometrically widening window of candidate
-        buckets (1, then 4, 16, …), never a job per bucket: the first probe
-        covers the position's own bucket (which may hold only rows ≤ lsn),
-        and because every *later* nonempty bucket only holds rows > lsn,
-        the second probe succeeds whenever any data exists — ≤2 jobs on a
-        contiguous-or-gapped log, O(log #buckets) worst case.
+        One query over at most two buckets: ``lsn``'s own bucket (which
+        may hold only rows <= lsn) and the next bucket that exists.  That
+        suffices because a bucket directory exists only after ``write``
+        has put rows in it, and ``prune`` removes whole directories — so
+        every later bucket holds only rows > lsn, and the next one holds
+        the answer whenever the own bucket does not.
         """
-        if not os.path.exists(self.path):
-            return None
-        lo_b = lsn // self.bucket_size
-        cands = sorted(
-            b for b in (
-                int(d.split("=", 1)[1])
-                for d in os.listdir(self.path)
-                if d.startswith(f"{LSN_BUCKET_COL}=")
-            )
-            if b >= lo_b
-        )
-        #: scan-count instrumentation (regression-pinned by tests — each
-        #: probe is one Spark query; AQE may split a query into >1 job)
-        self.last_probe_scans = 0
-        i, k = 0, 1
-        while i < len(cands):
-            window = cands[i:i + k]
-            self.last_probe_scans += 1
-            row = (
-                self.read()
-                .where(F.col(LSN_BUCKET_COL).isin(window)
-                       & (F.col("commit_lsn") > lsn))
-                .agg(F.min("commit_lsn").alias("m"))
-                .collect()[0]
-            )
-            if row["m"] is not None:
-                return row["m"]
-            i += k
-            k *= 4
-        return None
+        own = lsn // self.bucket_size
+        later = [b for b in self._buckets() if b >= own]
+        window = later[:2] if later and later[0] == own else later[:1]
+        return self._lsn_agg(window, F.min, F.col("commit_lsn") > lsn)
 
     def prune(self, before_lsn: int) -> int:
         """Drop whole LSN buckets wholly below ``before_lsn`` — the
@@ -125,59 +139,19 @@ class BinlogSource:
         needed).  Pure directory removals — no Spark job, no rewrite.
         Returns the number of buckets removed.
         """
-        import shutil
-
-        if not os.path.exists(self.path):
-            return 0
-        removed = 0
-        for d in os.listdir(self.path):
-            if not d.startswith(f"{LSN_BUCKET_COL}="):
-                continue
-            b = int(d.split("=", 1)[1])
-            # bucket b holds commit_lsn in [b*size, (b+1)*size - 1]
-            if (b + 1) * self.bucket_size - 1 < before_lsn:
-                shutil.rmtree(os.path.join(self.path, d),
-                              ignore_errors=True)
-                removed += 1
-        return removed
+        # bucket b holds commit_lsn in [b*size, (b+1)*size - 1]
+        gone = [b for b in self._buckets()
+                if (b + 1) * self.bucket_size - 1 < before_lsn]
+        for b in gone:
+            shutil.rmtree(self._bucket_dir(b), ignore_errors=True)
+        return len(gone)
 
     def min_lsn(self) -> int | None:
         """Smallest retained commit_lsn (None for an empty log) — what a
-        brand-new consumer can replay from after pruning."""
-        if not os.path.exists(self.path):
-            return None
-        buckets = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith(f"{LSN_BUCKET_COL}=")
-        ]
-        if not buckets:
-            return None
-        bot = min(buckets)
-        row = (
-            self.read()
-            .where(F.col(LSN_BUCKET_COL) == bot)
-            .agg(F.min("commit_lsn").alias("m"))
-            .collect()[0]
-        )
-        return row["m"]
+        brand-new consumer can replay from after pruning; reads the
+        bottom bucket only."""
+        return self._lsn_agg(self._buckets()[:1], F.min)
 
     def max_lsn(self) -> int | None:
-        """S5 probe, pruned to the highest bucket only."""
-        if not os.path.exists(self.path):
-            return None
-        buckets = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith(f"{LSN_BUCKET_COL}=")
-        ]
-        if not buckets:
-            return None
-        top = max(buckets)
-        row = (
-            self.read()
-            .where(F.col(LSN_BUCKET_COL) == top)
-            .agg(F.max("commit_lsn").alias("m"))
-            .collect()[0]
-        )
-        return row["m"]
+        """S5 probe: reads the top bucket only."""
+        return self._lsn_agg(self._buckets()[-1:], F.max)

@@ -15,6 +15,7 @@ DataFrames for the F4 stop-LSN filter.
 from __future__ import annotations
 
 import json
+import logging
 import os
 from typing import Any
 
@@ -22,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from debezium_connector_db2_spark.schemas import CAPTURE_REGISTRY_SCHEMA
 from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
+
+_log = logging.getLogger(__name__)
 
 
 class CaptureRegistry:
@@ -158,8 +161,6 @@ def captured_tables(registry: "CaptureRegistry",
     warning is the only signal).  Emits to the log and, when a
     notification channel is given, as an aggregate-type
     ``Capture Filters`` notification."""
-    import logging
-
     tables = registry.active_tables()
     if include is not None:
         inc = set(include)
@@ -168,7 +169,7 @@ def captured_tables(registry: "CaptureRegistry",
         exc = set(exclude)
         tables = [t for t in tables if t not in exc]
     if not tables:
-        logging.getLogger(__name__).warning(NO_CAPTURED_TABLES_WARNING)
+        _log.warning(NO_CAPTURED_TABLES_WARNING)
         if notifications is not None:
             notifications.emit("Capture Filters", "EMPTY_CAPTURE_SET",
                                {"include": include, "exclude": exclude})

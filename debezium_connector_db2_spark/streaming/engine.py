@@ -32,6 +32,7 @@ serially via per-record offsets + event serial numbers
 from __future__ import annotations
 
 import datetime
+import logging
 import os
 from dataclasses import dataclass, field
 from typing import Any, Callable, Sequence
@@ -49,6 +50,8 @@ from debezium_connector_db2_spark.streaming.checkpoint import (
     Offset,
     write_atomic,
 )
+
+_log = logging.getLogger(__name__)
 
 
 def rename_map(target: LakeTable, manifest: dict | None = None) -> dict[str, str]:
@@ -485,10 +488,7 @@ class CdcEngine:
                 # a bad signal must not wedge the streaming loop in a
                 # crash-retry cycle: surface it and move on (the reference
                 # logs and skips unprocessable signals)
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "signal %s (%s) failed: %s", sig.id, sig.type, e)
+                _log.warning("signal %s (%s) failed: %s", sig.id, sig.type, e)
                 self._notify("Signal", "FAILED",
                              {"signal_id": sig.id, "signal_type": sig.type,
                               "error": str(e)[:500]})
@@ -1167,8 +1167,6 @@ def run_all_with_repair(
     ``{table: [BatchMetrics]}`` for healthy tables and ``{table:
     Exception}`` for repaired ones.
     """
-    import logging
-
     results: dict[str, Any] = {}
     for table, eng in engines.items():
         try:
@@ -1183,7 +1181,7 @@ def run_all_with_repair(
                 notifications.emit(
                     "Capture Repair", "DEREGISTERED",
                     {"table": table, "error": str(e)[:500]})
-            logging.getLogger(__name__).warning(
+            _log.warning(
                 "capture feed for %r failed (%s); deregistered, continuing "
                 "with remaining tables", table, type(e).__name__)
             results[table] = e

@@ -27,11 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
-from debezium_connector_db2_spark.schemas import (
-    BINLOG_SCHEMA,
-    LSN_BUCKET_COL,
-    PK_COLS,
-)
+from debezium_connector_db2_spark.schemas import BINLOG_SCHEMA, PK_COLS
+from debezium_connector_db2_spark.sources.binlog import read_schema
 from debezium_connector_db2_spark.streaming.checkpoint import create_or_adopt
 from debezium_connector_db2_spark.streaming.engine import normalize_changes
 
@@ -90,13 +87,9 @@ class StreamingCdc:
         )
 
     def start(self, available_now: bool = True, processing_time: str | None = None):
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(self.schema.fields)
-            + [T.StructField(LSN_BUCKET_COL, T.LongType(), True)]
-        )
-        reader = self.spark.readStream.schema(schema)
+        # the binlog root, not bucket paths: the file source must discover
+        # buckets written after the query starts
+        reader = self.spark.readStream.schema(read_schema(self.schema))
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         stream = reader.parquet(self.binlog_dir)

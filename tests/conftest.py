@@ -42,3 +42,10 @@ def assert_df_equal(a, b, key_cols):
         f" only_a={set(map(str, ra)) - set(map(str, rb))}"
         f" only_b={set(map(str, rb)) - set(map(str, ra))}"
     )
+
+
+def jobs_in_group(sc, group):
+    """Ids of the Spark jobs submitted under job group ``group``."""
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))

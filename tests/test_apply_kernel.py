@@ -18,13 +18,7 @@ from debezium_connector_db2_spark.sources.generator import (
 )
 from debezium_connector_db2_spark.streaming.engine import CdcEngine
 
-from tests.conftest import assert_df_equal
-
-
-def _jobs_in_group(sc, group):
-    # job starts reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import assert_df_equal, jobs_in_group
 
 
 def _snapshotted_engine(spark, tmpdir_path, merge_mode, versioned):
@@ -73,8 +67,8 @@ def test_apply_batch_jobs_all_start_inside_merge(spark, tmpdir_path,
         sc.setLocalProperty("spark.job.description", None)
 
     assert m.applied and m.events > 0 and 0 < m.keys <= m.events
-    assert _jobs_in_group(sc, inside)
-    assert _jobs_in_group(sc, outside) == set()
+    assert jobs_in_group(sc, inside)
+    assert jobs_in_group(sc, outside) == set()
     assert_df_equal(t.read(), oracle_final_state(snap, binlog), PK_COLS)
     # the batch's lineage row carries the same stats as BatchMetrics
     lin = eng.lineage().collect()
