@@ -27,9 +27,6 @@ class Offset:
     snapshot_completed: bool = False
     last_batch_id: str | None = None
 
-    def position(self) -> tuple[int, int]:
-        return (self.commit_lsn, self.intent_seq)
-
 
 class Checkpoint:
     def __init__(self, path: str):
@@ -70,7 +67,7 @@ def write_atomic(path: str, text: str) -> None:
     content or the new, never a torn file, and the new bytes are on disk
     before the name points at them.  The one writer of every small state
     file (offsets, manifests and the version pointer, registry, signals,
-    consumer-group offsets)."""
+    the pause marker, consumer-group offsets)."""
     tmp = _durable_temp(path, text)
     try:
         os.replace(tmp, path)  # atomic on POSIX

@@ -13,10 +13,12 @@ Spark rendering of the reference's coordinator + streaming loop
   shape (``normalize_changes``), dedup last-writer-wins (A4), MERGE into
   the lake table (J5) with a deterministic batch id (exactly-once, T4),
   append one lineage row for the batch, advance the checkpoint.
-* schema changes         — applied at their effective LSN by splitting the
-  batch at the switch point, mirroring the reference's LSN-ordered schema
-  checkpoint queue (``Db2StreamingChangeEventSource.java:119, 241-245,
-  350-412``).
+* schema changes         — configured ``SchemaChange``s and the DDL
+  carried by the registry's new capture instances (S8), looked up in one
+  place (``_switches``): a batch never crosses a switch, and the DDL runs
+  once the checkpoint sits just before its effective LSN, mirroring the
+  reference's LSN-ordered schema checkpoint queue
+  (``Db2StreamingChangeEventSource.java:119, 241-245, 350-412``).
 
 Crash-safety argument (tested in tests/test_restart.py): the lake commit
 records the batch id atomically with the data.  If the process dies after
@@ -24,9 +26,12 @@ the MERGE but before the checkpoint write, the restart recomputes a batch
 covering the same events; the MERGE is last-writer-wins per key, so
 re-applying an already-applied prefix together with newer events yields
 the same final state, and an *identical* recomputed batch is skipped
-outright by its batch id.  The reference reaches the same guarantee
-serially via per-record offsets + event serial numbers
-(``Db2OffsetContext.java:66-104``, ``restartInTheMiddleOfTx*`` tests).
+outright by its batch id; DDL is idempotent, so a replayed switch re-runs
+as a no-op.  The tests reach that window through the ``on_batch`` hook,
+which runs after the MERGE commits and before the checkpoint write.  The
+reference reaches the same guarantee serially via per-record offsets +
+event serial numbers (``Db2OffsetContext.java:66-104``,
+``restartInTheMiddleOfTx*`` tests).
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ from __future__ import annotations
 import datetime
 import logging
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -150,7 +155,6 @@ class CdcEngine:
         pk_cols: Sequence[str] = tuple(PK_COLS),
         max_lsns_per_batch: int | None = None,
         schema_changes: Sequence[SchemaChange] = (),
-        lineage_dir: str | None = None,
         registry=None,
         payload_transform: Callable[[DataFrame], DataFrame] | None = None,
         signals=None,
@@ -172,9 +176,8 @@ class CdcEngine:
         self.max_lsns_per_batch = max_lsns_per_batch
         self.schema_changes = sorted(schema_changes, key=lambda c: c.effective_lsn)
         self.checkpoint = Checkpoint(checkpoint_dir)
-        self.lineage_dir = lineage_dir or os.path.join(
-            os.path.abspath(checkpoint_dir), "lineage"
-        )
+        self.lineage_dir = os.path.join(os.path.abspath(checkpoint_dir),
+                                        "lineage")
         self.registry = registry
         #: optional vectorized transform applied to the flat change rows
         #: before dedup+merge — e.g. the F7 column mask/hash/truncate
@@ -205,10 +208,6 @@ class CdcEngine:
             os.path.abspath(checkpoint_dir), "signals_done.json")
         self._pause_file = os.path.join(
             os.path.abspath(checkpoint_dir), "paused")
-        #: registry capture-instance switches already applied this run
-        #: (in-memory only: re-deriving after a restart is safe because
-        #: DDL application is idempotent)
-        self._applied_switches: set[str] = set()
         #: logical schema of the captured table, used to qualify names in
         #: the config-surface regexes below (the reference's
         #: ``SOURCE_OWNER``, e.g. DB2INST1)
@@ -444,8 +443,7 @@ class CdcEngine:
 
     def _set_paused(self, value: bool) -> None:
         if value:
-            with open(self._pause_file, "w") as f:
-                f.write("1")
+            write_atomic(self._pause_file, "1")
         elif os.path.exists(self._pause_file):
             os.remove(self._pause_file)
 
@@ -600,7 +598,6 @@ class CdcEngine:
         return rename_map(self.target)
 
     def apply_batch(self, off: Offset, to_lsn: int,
-                    write_checkpoint: bool = True,
                     on_batch: Callable[["BatchMetrics"], Any] | None = None,
                     ) -> BatchMetrics:
         """Normalize → dedup → MERGE one LSN interval ``(off.pos, to_lsn]``.
@@ -671,12 +668,10 @@ class CdcEngine:
                          applied)
         if on_batch is not None:
             on_batch(m)  # pre-checkpoint: crash here -> batch replays
-        if write_checkpoint:
-            new_off = Offset(
-                commit_lsn=to_lsn, intent_seq=2**62, epoch=epoch,
-                snapshot_completed=off.snapshot_completed, last_batch_id=batch_id,
-            )
-            self.checkpoint.write(new_off)
+        self.checkpoint.write(Offset(
+            commit_lsn=to_lsn, intent_seq=2**62, epoch=epoch,
+            snapshot_completed=off.snapshot_completed, last_batch_id=batch_id,
+        ))
         return m
 
     def _save_lineage(self, epoch: int, max_applied_lsn: int | None,
@@ -1018,16 +1013,32 @@ class CdcEngine:
             F.col("commit_lsn").alias("tx_id"), "event_count",
             "begin_seq", "end_seq", "table", "table_event_count")
 
+    def _switches(self, lo: int, hi: int) -> list[SchemaChange]:
+        """Schema changes taking effect in ``(lo, hi]``, in LSN order: the
+        configured ones plus those the registry's new capture instances of
+        this table carry (S8; the reference rebuilds its schema checkpoints
+        from the registry, ``Db2StreamingChangeEventSource.java:165-174,
+        350-412``)."""
+        out = [c for c in self.schema_changes if lo < c.effective_lsn <= hi]
+        if self.registry is not None:
+            out += [SchemaChange(e["start_lsn"], e["schema_change"]["action"],
+                                 e["schema_change"]["args"])
+                    for e in self.registry.new_instances_in(lo, hi)
+                    if e.get("schema_change") and e["table"] == self.table]
+        return sorted(out, key=lambda c: c.effective_lsn)
+
     def run_available(
         self,
         on_batch: Callable[[BatchMetrics], Any] | None = None,
-        crash_after_merge_epoch: int | None = None,
     ) -> list[BatchMetrics]:
         """Drain the binlog to its current end in bounded micro-batches.
 
-        ``availableNow`` semantics (T1/T2).  ``crash_after_merge_epoch`` is
-        a test hook that simulates dying between the sink commit and the
-        checkpoint write (the exactly-once crash window).
+        ``availableNow`` semantics (T1/T2).  Each iteration plans one
+        interval ``(lo, hi]`` and applies it through ``apply_batch``:
+        a batch never crosses a schema switch, and a switch's DDL runs
+        once the checkpoint sits at ``effective_lsn - 1`` (on a replay
+        too: DDL is idempotent).  ``on_batch`` is ``apply_batch``'s
+        pre-checkpoint hook.
         """
         if self._streaming_disabled:
             return []  # snapshot mode 'initial_only'
@@ -1043,62 +1054,29 @@ class CdcEngine:
             if hi is None or hi <= off.commit_lsn:
                 break  # T9: nothing new — idle heartbeat
             lo = off.commit_lsn
-            if self.max_lsns_per_batch is not None:
-                if prev_empty:
-                    # fast-forward over an LSN gap so bounded batches don't
-                    # crawl empty ranges (reference idle sleep T9, for holes).
-                    # Probed only after an empty batch — contiguous logs
-                    # never pay for it.
-                    nxt = self.binlog.min_lsn_after(lo)
-                    if nxt is None:
-                        break
-                    lo = max(lo, nxt - 1)
-                    if lo > off.commit_lsn:
-                        off = Offset(commit_lsn=lo, intent_seq=-1, epoch=off.epoch,
-                                     snapshot_completed=off.snapshot_completed,
-                                     last_batch_id=off.last_batch_id)
-                hi = min(hi, lo + self.max_lsns_per_batch)
-
-            # S8: new capture instances in the interval carry pending DDL —
-            # merge registry-derived switches with the configured ones (the
-            # reference rebuilds its table set + schema checkpoints from the
-            # registry, Db2StreamingChangeEventSource.java:165-174, 350-412)
-            registry_pending = []
-            if self.registry is not None:
-                for e in self.registry.new_instances_in(lo, hi + 1):
-                    sc = e.get("schema_change")
-                    if not sc or e["table"] != self.table:
-                        continue
-                    if e["capture_instance"] in self._applied_switches:
-                        continue
-                    registry_pending.append(
-                        (e["capture_instance"],
-                         SchemaChange(e["start_lsn"], sc["action"],
-                                      sc["args"])))
-
-            # LSN-ordered schema-change checkpoints: split the batch at the
-            # first pending switch inside the interval.
-            pending = [(None, c) for c in self.schema_changes
-                       if lo < c.effective_lsn <= hi + 1] + registry_pending
-            pending.sort(key=lambda p: p[1].effective_lsn)
-            if pending and pending[0][1].effective_lsn <= hi:
-                instance, sw = pending[0]
-                if sw.effective_lsn - 1 > lo:
-                    m = self.apply_batch(off, sw.effective_lsn - 1,
-                                         on_batch=on_batch)
-                    out.append(m)
+            switches = self._switches(lo, hi)
+            if self.max_lsns_per_batch is not None and prev_empty:
+                # fast-forward over an LSN gap so bounded batches don't
+                # crawl empty ranges (reference idle sleep T9, for holes),
+                # but never past a pending switch.  Probed only after an
+                # empty batch — contiguous logs never pay for it.
+                nxt = self.binlog.min_lsn_after(lo)
+                if nxt is None:
+                    break
+                if switches:
+                    nxt = min(nxt, switches[0].effective_lsn)
+                if nxt - 1 > lo:
+                    lo = nxt - 1
+                    off = replace(off, commit_lsn=lo, intent_seq=-1)
+            # LSN-ordered schema checkpoints: run the switches due at
+            # lo + 1, end the batch before the next one
+            for sw in switches:
+                if sw.effective_lsn > lo + 1:
+                    hi = min(hi, sw.effective_lsn - 1)  # stop before it
+                    break
                 self._apply_ddl(sw)
-                if instance is not None:
-                    self._applied_switches.add(instance)
-                else:
-                    self.schema_changes = [c for c in self.schema_changes
-                                           if c is not sw]
-                continue
-
-            if crash_after_merge_epoch is not None and off.epoch + 1 == crash_after_merge_epoch:
-                # simulate: merge commits, checkpoint write never happens
-                self.apply_batch(off, hi, write_checkpoint=False)
-                raise SimulatedCrash(off.epoch + 1)
+            if self.max_lsns_per_batch is not None:
+                hi = min(hi, lo + self.max_lsns_per_batch)
 
             m = self.apply_batch(off, hi, on_batch=on_batch)
             prev_empty = m.events == 0
@@ -1111,10 +1089,6 @@ class CdcEngine:
                 self.target.compact(
                     max_files_per_bucket=self.auto_compact_files)
         return out
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by the crash-injection test hook."""
 
 
 def export_envelope_multi(

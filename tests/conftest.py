@@ -49,3 +49,20 @@ def jobs_in_group(sc, group):
     # job starts reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class SimulatedCrash(RuntimeError):
+    """The process "dies" inside the exactly-once crash window."""
+
+
+def crash_at(epoch, then=None):
+    """An ``on_batch`` hook that crashes at batch ``epoch``: the hook runs
+    after the batch's MERGE commits and before its checkpoint write, so
+    the raise leaves the lake one batch ahead of the checkpoint.  Earlier
+    batches go on to ``then`` (the hook under test, if any)."""
+    def hook(m):
+        if m.epoch == epoch:
+            raise SimulatedCrash(epoch)
+        if then is not None:
+            return then(m)
+    return hook

@@ -1,8 +1,9 @@
 """The benchmark's contract with the package, checked without Spark.
 
 ``perfbench`` wraps layer methods by name (``tracing.LAYER_CALLS``) and
-constructs both frontends with fixed keywords; a rename or a dropped
-parameter in the package would break the benchmark only when it runs.
+constructs both frontends with fixed keywords, as do ``bench.py`` and the
+replay scripts; a rename or a dropped parameter in the package would
+break them only when they run.
 """
 
 import ast
@@ -37,7 +38,16 @@ def test_traced_layer_calls_resolve():
         assert callable(cls.__dict__.get(meth)), f"{path}.{meth} is gone"
 
 
-@pytest.mark.parametrize("script", ["perfbench/workloads.py", "bench.py"])
+#: the frontends each script constructs
+CONSTRUCTS = {
+    "perfbench/workloads.py": {"CdcEngine", "StreamingCdc"},
+    "bench.py": {"CdcEngine", "StreamingCdc"},
+    "scripts/replay_once.py": {"CdcEngine"},
+    "scripts/submit_replay.py": {"CdcEngine"},
+}
+
+
+@pytest.mark.parametrize("script", list(CONSTRUCTS))
 def test_frontend_constructors_accept_benchmark_calls(script):
     frontends = {"CdcEngine": CdcEngine, "StreamingCdc": StreamingCdc}
     with open(os.path.join(REPO_DIR, script)) as f:
@@ -45,7 +55,7 @@ def test_frontend_constructors_accept_benchmark_calls(script):
     calls = [n for n in ast.walk(tree)
              if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
              and n.func.id in frontends]
-    assert {c.func.id for c in calls} == set(frontends)
+    assert {c.func.id for c in calls} == CONSTRUCTS[script]
     for c in calls:
         sig = inspect.signature(frontends[c.func.id])
         sig.bind(*[None] * len(c.args),

@@ -21,11 +21,9 @@ from pyspark.sql import types as T
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.schemas import BINLOG_FIELDS, BINLOG_SCHEMA, TRANSCRIPT_SCHEMA
 from debezium_connector_db2_spark.sources.binlog import BinlogSource
-from debezium_connector_db2_spark.streaming.engine import (
-    CdcEngine,
-    SchemaChange,
-    SimulatedCrash,
-)
+from debezium_connector_db2_spark.streaming.engine import CdcEngine, SchemaChange
+
+from tests.conftest import SimulatedCrash, crash_at
 
 TS = datetime.datetime(2026, 1, 1)
 
@@ -61,7 +59,7 @@ def test_ddl_replay_after_crash_is_idempotent(spark, tmpdir_path):
     eng = CdcEngine(spark, src, target, ckpt, schema_changes=list(changes))
     with pytest.raises(SimulatedCrash):
         # epoch 1 = pre-switch batch; epoch 2 = post-switch batch (after DDL)
-        eng.run_available(crash_after_merge_epoch=2)
+        eng.run_available(on_batch=crash_at(2))
 
     # torn state: DDL + post-switch merge landed, checkpoint still at epoch 1
     assert eng.checkpoint.read().epoch == 1

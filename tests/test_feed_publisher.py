@@ -83,7 +83,7 @@ def test_feed_publisher_replay_recovers_lost_segment(spark, tmpdir_path):
     replayed batch reports events==0 (merge dedup-skips on its batch id),
     but the publisher must NOT trust that — it re-exports the interval
     and writes the missing segment."""
-    from debezium_connector_db2_spark.streaming.engine import SimulatedCrash
+    from tests.conftest import SimulatedCrash, crash_at
 
     import pytest
 
@@ -96,9 +96,9 @@ def test_feed_publisher_replay_recovers_lost_segment(spark, tmpdir_path):
     pub = FeedPublisher(eng, os.path.join(tmpdir_path, "feed"))
 
     # crash after the merge commits, before checkpoint (and before the
-    # on_batch hook could ever run — apply_batch raises first)
+    # publisher sees the batch — the crash hook raises first)
     with pytest.raises(SimulatedCrash):
-        eng.run_available(on_batch=pub.publish, crash_after_merge_epoch=1)
+        eng.run_available(on_batch=crash_at(1, pub.publish))
     assert pub.segments() == []             # nothing published pre-crash
 
     # restart: replayed batch is dedup-skipped (applied=False, events=0)

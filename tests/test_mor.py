@@ -128,7 +128,7 @@ def test_mor_engine_replay_matches_oracle(spark, tmpdir_path):
         generate_snapshot,
         oracle_final_state,
     )
-    from debezium_connector_db2_spark.streaming.engine import SimulatedCrash
+    from tests.conftest import SimulatedCrash, crash_at
 
     snap = generate_snapshot(spark, n_convs=40, turns_per_conv=8, seed=9)
     log = generate_binlog(spark, n_ops=600, n_convs=40, turns_per_conv=8,
@@ -141,7 +141,7 @@ def test_mor_engine_replay_matches_oracle(spark, tmpdir_path):
     eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"),
                     max_lsns_per_batch=30)
     with pytest.raises(SimulatedCrash):
-        eng.run_available(crash_after_merge_epoch=2)
+        eng.run_available(on_batch=crash_at(2))
     eng2 = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"),
                      max_lsns_per_batch=30)
     eng2.run_available()

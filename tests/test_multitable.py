@@ -229,7 +229,7 @@ def test_multi_feed_publisher_crash_recovery(spark, tmpdir_path):
     resumes from the segment listing + engine checkpoints, replays the
     dedup-skipped batch, and the feed ends complete with no duplicate
     segments."""
-    from debezium_connector_db2_spark.streaming.engine import SimulatedCrash
+    from tests.conftest import SimulatedCrash, crash_at
     from debezium_connector_db2_spark.streaming.feed import MultiFeedPublisher
 
     import pytest
@@ -244,7 +244,7 @@ def test_multi_feed_publisher_crash_recovery(spark, tmpdir_path):
 
     with pytest.raises(SimulatedCrash):
         engines["tablea"].run_available(
-            on_batch=pub.hook_for("tablea"), crash_after_merge_epoch=1)
+            on_batch=crash_at(1, pub.hook_for("tablea")))
     assert pub.segments() == []       # nothing publishable pre-crash
 
     # restart: fresh engines (same checkpoints/targets), fresh publisher

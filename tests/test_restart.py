@@ -23,9 +23,9 @@ from debezium_connector_db2_spark.sources.generator import (
     oracle_final_state,
 )
 from debezium_connector_db2_spark.streaming.checkpoint import create_or_adopt
-from debezium_connector_db2_spark.streaming.engine import CdcEngine, SimulatedCrash
+from debezium_connector_db2_spark.streaming.engine import CdcEngine
 
-from tests.conftest import assert_df_equal
+from tests.conftest import SimulatedCrash, assert_df_equal, crash_at
 
 
 def test_crash_between_merge_and_checkpoint(spark, tmpdir_path):
@@ -44,7 +44,7 @@ def test_crash_between_merge_and_checkpoint(spark, tmpdir_path):
     ckpt = os.path.join(tmpdir_path, "ckpt")
     eng = CdcEngine(spark, src, target, ckpt, max_lsns_per_batch=60)
     with pytest.raises(SimulatedCrash):
-        eng.run_available(crash_after_merge_epoch=2)
+        eng.run_available(on_batch=crash_at(2))
 
     # the crashed epoch's merge landed in the lake, but the checkpoint
     # still points at epoch 1 — the classic torn state
@@ -83,7 +83,7 @@ def test_crash_sweep_every_epoch_converges(spark, tmpdir_path, crash_epoch):
     ckpt = os.path.join(tmpdir_path, "ckpt")
     eng = CdcEngine(spark, src, target, ckpt, max_lsns_per_batch=30)
     with pytest.raises(SimulatedCrash):
-        eng.run_available(crash_after_merge_epoch=crash_epoch)
+        eng.run_available(on_batch=crash_at(crash_epoch))
     CdcEngine(spark, src, target, ckpt, max_lsns_per_batch=30).run_available()
     assert_df_equal(target.read(), oracle_final_state(snap, binlog), PK_COLS)
 

@@ -2,7 +2,7 @@
 change tests (``AbstractDb2DefaultValueIT.java``, ``ZZZDb2OnlineDefault
 ValueIT.java``): a new capture instance starts at a switch LSN with an
 added / renamed column; the engine applies the DDL at exactly that LSN
-(splitting the batch), backfills defaults for untouched rows, and keeps
+(no batch crosses the switch), backfills defaults for untouched rows, and keeps
 old-instance rows readable.
 """
 
@@ -66,6 +66,40 @@ def test_add_column_at_switch_lsn(spark, tmpdir_path):
     assert "sentiment" in [f.name for f in target.schema().fields]
     # schema history is ordered and recorded in the manifest
     assert target.manifest()["current_schema_version"] == 1
+
+
+def test_switch_inside_skipped_lsn_gap_is_applied(spark, tmpdir_path):
+    """Bounded batches fast-forward over an empty LSN range; a switch
+    inside that range must stop the skip and run at its LSN, not be
+    jumped over (which silently drops the added column's values)."""
+    rows = [
+        _row(1, 0, "I", "c1", 0, "hello"),
+        _row(2, 0, "I", "c1", 1, "old-row"),
+        # ---- LSNs 3..49 empty; switch at 30 adds `sentiment` ----
+        _row(50, 0, "I", "c2", 0, "new-row", "pos", 1),
+        _row(51, 0, "U", "c1", 0, "hello-v2", "neg", 1),
+    ]
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "binlog"),
+                       bucket_size=8, schema=EXT_SCHEMA)
+    src.write(spark.createDataFrame(rows, EXT_SCHEMA))
+    target = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPT_SCHEMA,
+        bucket_by="conv_id", n_buckets=4,
+    )
+    eng = CdcEngine(
+        spark, src, target, os.path.join(tmpdir_path, "ckpt"),
+        max_lsns_per_batch=10,
+        schema_changes=[SchemaChange(30, "add_column",
+                                     {"name": "sentiment", "dtype": "string",
+                                      "default": "n/a"})],
+    )
+    eng.run_available()
+
+    assert "sentiment" in [f.name for f in target.schema().fields]
+    got = {(r.conv_id, r.turn_idx): r for r in target.read().collect()}
+    assert got[("c2", 0)].sentiment == "pos"
+    assert got[("c1", 0)].text == "hello-v2" and got[("c1", 0)].sentiment == "neg"
+    assert got[("c1", 1)].sentiment == "n/a"
 
 
 def test_rename_column_with_old_instance_rows(spark, tmpdir_path):

@@ -105,6 +105,34 @@ def test_signal_pause_resume(spark, tmpdir_path):
     assert {r.text for r in t.read().collect()} == {"v2"}
 
 
+def test_pause_marker_is_durable_before_signal_is_consumed(
+        spark, tmpdir_path, monkeypatch):
+    """The pause marker goes through the durable atomic writer, and
+    before the consumed-signal set: a crash can never leave a pause
+    signal recorded as consumed while the pause itself is lost."""
+    from debezium_connector_db2_spark.streaming import engine as engine_mod
+
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=8)
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)
+    signals = SignalChannel(os.path.join(tmpdir_path, "sig"))
+    ck = os.path.join(tmpdir_path, "ck")
+    eng = CdcEngine(spark, src, t, ck, signals=signals)
+    signals.send("pause")
+
+    written = []
+    real = engine_mod.write_atomic
+
+    def recording(path, text):
+        written.append(os.path.basename(path))
+        real(path, text)
+
+    monkeypatch.setattr(engine_mod, "write_atomic", recording)
+    assert eng.process_signals() == 1
+    assert eng.paused()
+    assert written == ["paused", "signals_done.json"]
+
+
 def test_signal_blocking_snapshot(spark, tmpdir_path):
     """Blocking snapshot mid-stream: full re-read of the current source,
     stream resumes past it (T7)."""

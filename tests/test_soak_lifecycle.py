@@ -17,10 +17,10 @@ from debezium_connector_db2_spark.sources.generator import (
     generate_snapshot,
     oracle_final_state,
 )
-from debezium_connector_db2_spark.streaming.engine import CdcEngine, SimulatedCrash
+from debezium_connector_db2_spark.streaming.engine import CdcEngine
 from debezium_connector_db2_spark.streaming.signals import SignalChannel
 
-from tests.conftest import assert_df_equal
+from tests.conftest import SimulatedCrash, assert_df_equal, crash_at
 
 
 def test_soak_many_cycles(spark, tmpdir_path):
@@ -62,7 +62,7 @@ def test_soak_many_cycles(spark, tmpdir_path):
             # crash mid-cycle, then resume with a fresh engine
             with pytest.raises(SimulatedCrash):
                 eng.run_available(
-                    crash_after_merge_epoch=eng.checkpoint.read().epoch + 1)
+                    on_batch=crash_at(eng.checkpoint.read().epoch + 1))
             eng = CdcEngine(spark, src, target, ck, max_lsns_per_batch=40,
                             signals=signals, snapshot_source=provider)
         if cycle == 3:
