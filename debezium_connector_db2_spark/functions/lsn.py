@@ -30,10 +30,3 @@ def hex_to_lsn(col: Column) -> Column:
 def lsn_increment(col: Column) -> Column:
     """``Lsn.increment()``: position immediately after this one."""
     return col + F.lit(1)
-
-
-def position_struct(commit_lsn: Column, intent_seq: Column) -> Column:
-    """TxLogPosition composite key (``TxLogPosition.java:84-87``):
-    compares (commitLsn, inTxLsn) lexicographically — Spark struct
-    ordering does exactly this."""
-    return F.struct(commit_lsn.alias("commit_lsn"), intent_seq.alias("intent_seq"))

@@ -907,10 +907,11 @@ class LakeTable:
             return False
         cols = [f.name for f in self.schema(m).fields]
         versioned = m.get("versioned", False)
-        if versioned:
+
+        def versioned_rows(df):
             # change rows as versioned rows: their position, and deletes
             # as tombstones
-            incoming = changes.select(
+            return df.select(
                 *cols,
                 F.col("commit_lsn").alias("__commit_lsn"),
                 F.col("intent_seq").alias("__intent_seq"),
@@ -932,45 +933,52 @@ class LakeTable:
             # driver-side probes.  Resolution happens on read
             # (_resolve_latest); compact() folds deltas into the base.
             self._commit_rows(
-                m, self._stored(incoming, m),
+                m, self._stored(versioned_rows(changes), m),
                 summary or (lambda written: {"operation": "merge-delta",
                                              "delta_buckets": len(written)}),
                 batch_id, replace=())
             return True
 
-        # Manifest-level pruning: which buckets does this batch touch?
-        # Bounded by n_buckets, so the collect is tiny.
-        touched = [r["__bucket"] for r in changes.select(
-            bucket_expr(m["bucket_by"], m["n_buckets"]).alias("__bucket")
-        ).distinct().collect()]
-        if not touched:
-            self._commit_child(dict(m), summary or {"operation": "merge", "empty": True},
-                               batch_id)
-            return True
+        # Copy-on-write reads the change set twice (the bucket probe, then
+        # the rewrite): cache it for the span of this MERGE only.
+        changes = changes.persist()
+        try:
+            # Manifest-level pruning: which buckets does this batch touch?
+            # Bounded by n_buckets, so the collect is tiny.
+            touched = [r["__bucket"] for r in changes.select(
+                bucket_expr(m["bucket_by"], m["n_buckets"]).alias("__bucket")
+            ).distinct().collect()]
+            if not touched:
+                self._commit_child(
+                    dict(m), summary or {"operation": "merge", "empty": True},
+                    batch_id)
+                return True
 
-        old = self._read(m, buckets=touched, raw=versioned)
-        if versioned:
-            # Order-insensitive path: per-key argmax over (old rows ∪
-            # changes) on (__commit_lsn, __intent_seq); deletes become
-            # retained tombstone rows.  Safe under out-of-order batch
-            # delivery (e.g. a file-stream source), at the cost of
-            # storing tombstones until vacuum.
-            new_rows = self._resolve_latest(old.unionByName(incoming),
-                                            key_cols, cols)
-        else:
-            # Survivors: target rows whose key does NOT appear in the batch.
-            # ``changes`` carries ≤1 row per key (A4 dedup ran upstream), so
-            # no distinct is needed; AQE converts this to a broadcast
-            # anti-join when the key set is small.
-            survivors = old.join(
-                changes.select(*key_cols), on=list(key_cols), how="left_anti"
-            )
-            new_rows = survivors.unionByName(
-                changes.where(F.col(op_col) != delete_op).select(*cols))
-        self._commit_rows(
-            m, self._stored(new_rows, m),
-            summary or {"operation": "merge", "touched_buckets": len(touched)},
-            batch_id, replace=touched)
+            old = self._read(m, buckets=touched, raw=versioned)
+            if versioned:
+                # Order-insensitive path: per-key argmax over (old rows ∪
+                # changes) on (__commit_lsn, __intent_seq); deletes become
+                # retained tombstone rows.  Safe under out-of-order batch
+                # delivery (e.g. a file-stream source), at the cost of
+                # storing tombstones until vacuum.
+                new_rows = self._resolve_latest(
+                    old.unionByName(versioned_rows(changes)), key_cols, cols)
+            else:
+                # Survivors: target rows whose key does NOT appear in the
+                # batch.  ``changes`` carries ≤1 row per key (A4 dedup ran
+                # upstream), so no distinct is needed; AQE converts this
+                # to a broadcast anti-join when the key set is small.
+                survivors = old.join(changes.select(*key_cols),
+                                     on=list(key_cols), how="left_anti")
+                new_rows = survivors.unionByName(
+                    changes.where(F.col(op_col) != delete_op).select(*cols))
+            self._commit_rows(
+                m, self._stored(new_rows, m),
+                summary or {"operation": "merge",
+                            "touched_buckets": len(touched)},
+                batch_id, replace=touched)
+        finally:
+            changes.unpersist()
         return True
 
     def compact(self, max_files_per_bucket: int = 1) -> int:

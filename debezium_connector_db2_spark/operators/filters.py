@@ -58,11 +58,6 @@ def stop_lsn_filter(df: DataFrame, registry: DataFrame) -> DataFrame:
     ).drop("stop_lsn")
 
 
-def project_payload(df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
-    """F6: strip CDC metadata columns (``Db2Connection.java:396-400``)."""
-    return df.select(*payload_cols)
-
-
 def select_columns(
     all_columns: Sequence[str],
     qualified_table: str,

@@ -605,17 +605,18 @@ class CdcEngine:
         Job economy (matters at micro-batch cadence): every Spark job a
         batch submits runs inside ``merge_changes`` — the bucket probe
         and the write on a copy-on-write target, the delta write alone
-        on a merge-on-read one.  The deduplicated change set is cached
-        and materialized by the MERGE itself; the batch's stats (events
-        read, keys applied, max LSN, watermark) ride on ``Observation``s
-        of that same plan, so the lineage row costs no job.
+        on a merge-on-read one.  The deduplicated change set is
+        materialized by the MERGE itself (which caches it where it reads
+        it more than once); the batch's stats (events read, keys applied,
+        max LSN, watermark) ride on ``Observation``s of that same plan,
+        so the lineage row costs no job.
 
         ``on_batch`` runs *after* the merge commits but *before* the
         checkpoint write: a crash (or hook failure) between the two
         replays the batch on restart — the merge dedup-skips on its
         batch id and the hook fires again, so hook delivery is
-        at-least-once; an idempotent hook (FeedPublisher keys its
-        segment path on the batch interval) makes it exactly-once.
+        at-least-once; an idempotent hook (FeedPublisher publishes only
+        past its ``published_to`` frontier) makes it exactly-once.
         Running the hook after the checkpoint instead would open a
         window where a crash loses the hook's side effect permanently
         (the batch never replays).
@@ -643,19 +644,16 @@ class CdcEngine:
             F.count(F.lit(1)).alias("keys"),
             F.max("commit_lsn").alias("max_lsn"),
             F.unix_micros(F.max("ts")).alias("watermark"),
-        ).persist()
+        )
         epoch = off.epoch + 1
         batch_id = f"cdc-{self.table}-{off.commit_lsn}-{off.intent_seq}-{to_lsn}"
         n_events = n_keys = 0
-        try:
-            applied = self.target.merge_changes(
-                changes, self.pk_cols, op_col="op", delete_op="d",
-                batch_id=batch_id,
-                summary={"operation": "merge", "epoch": epoch,
-                         "from_lsn": off.commit_lsn, "to_lsn": to_lsn},
-            )
-        finally:
-            changes.unpersist()
+        applied = self.target.merge_changes(
+            changes, self.pk_cols, op_col="op", delete_op="d",
+            batch_id=batch_id,
+            summary={"operation": "merge", "epoch": epoch,
+                     "from_lsn": off.commit_lsn, "to_lsn": to_lsn},
+        )
         if applied:  # otherwise no action ran; Observation.get would block
             n_events = read.get["events"]
             stats = kept.get
@@ -775,13 +773,6 @@ class CdcEngine:
             stats["pruned_binlog_buckets"] = self.binlog.prune(
                 off.commit_lsn)
         return stats
-
-    def heartbeat(self) -> None:
-        """T9: record an idle heartbeat in the lineage table (the
-        reference emits heartbeat records when no new LSN appears,
-        ``Db2StreamingChangeEventSource.java:147-152``)."""
-        off = self.checkpoint.read()
-        self._save_lineage(off.epoch, off.commit_lsn, 0, None)
 
     # -- event-feed export (the S11 Kafka-topic analogue) --------------------
 

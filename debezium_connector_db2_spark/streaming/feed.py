@@ -3,21 +3,25 @@ LSN-ordered parquet segment log.
 
 The reference publishes per-table change events to Kafka topics as they
 stream (``Db2ConnectorTask`` dispatch).  Here the topic is a directory of
-parquet segments, one per applied micro-batch, written by a
-``FeedPublisher`` hooked into the engine loop as its ``on_batch``
-callback::
+parquet segments written by a ``FeedPublisher`` hooked into the engine
+loop as its ``on_batch`` callback::
 
     pub = FeedPublisher(engine, feed_dir, transaction_block=True)
     engine.run_available(on_batch=pub.publish)
+
+Segment ``seg-{from}-{to}`` holds the events of the LSN interval
+``(from, to]``; segments are disjoint and listed in LSN order, and the
+highest ``to`` is the feed's ``published_to`` frontier.
 
 Exactly-once, from two halves:
 
 * the engine fires ``on_batch`` *between* the merge commit and the
   checkpoint write, so a crash anywhere around publish replays the
   batch on restart (at-least-once delivery to the hook);
-* the segment path is a pure function of the batch ``(epoch, from_lsn,
-  to_lsn)``, so a replayed batch that already published skips, and one
-  that crashed pre-publish finds its segment missing and publishes now.
+* every publish clips its interval at ``published_to``, so a replayed
+  batch publishes only what lies past the frontier: nothing if it
+  already published, the missing tail if its replay is wider than the
+  crashed batch, and the whole interval if it crashed pre-publish.
 
 ``publish`` never decides emptiness from ``BatchMetrics.events`` alone:
 a replayed batch reports ``events == 0`` (the merge dedup-skipped on
@@ -90,25 +94,6 @@ def _retention_upto(upto_lsn: int | None, offset_dirs) -> int:
     return int(upto_lsn)
 
 
-def _prune_segments(feed_dir: str, prefix: str, upto_lsn: int) -> int:
-    """Remove segments whose path-encoded ``to`` LSN is ``<= upto_lsn``,
-    always keeping the newest segment (its ``to`` is the feed's
-    ``published_to`` recovery point — removing it would let a publisher
-    restart republish from 0, duplicating the stream).  A pure directory
-    walk on path-encoded ranges, like ``BinlogSource.prune``; no Spark
-    job, no data read."""
-    segs = [d for d in os.listdir(feed_dir) if d.startswith(prefix)]
-    if len(segs) <= 1:
-        return 0
-    newest = max(segs, key=lambda d: int(d.rsplit("-", 1)[1]))
-    removed = 0
-    for d in segs:
-        if d != newest and int(d.rsplit("-", 1)[1]) <= upto_lsn:
-            shutil.rmtree(os.path.join(feed_dir, d), ignore_errors=True)
-            removed += 1
-    return removed
-
-
 def _parquet_rows(path: str) -> int:
     """Row count of a written parquet directory from file footers — an
     os-level metadata read, no Spark job."""
@@ -122,56 +107,60 @@ def _parquet_rows(path: str) -> int:
     return total
 
 
-def _publish_segment(feed_dir: str, seg: str, df: DataFrame,
-                     keep=None) -> str | None:
-    """Write ``df`` as segment ``seg`` of ``feed_dir``: staged to a
-    dot-prefixed temp dir (invisible to Spark's reader) and atomically
-    renamed in, so a segment is all or nothing.  When ``keep(tmp)`` is
-    false the staged write is discarded instead; returns the segment
-    path, or None if discarded."""
-    tmp = os.path.join(feed_dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(tmp)
-    if keep is not None and not keep(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return None
-    final = os.path.join(feed_dir, seg)
-    os.rename(tmp, final)
-    return final
-
-
 class _SegmentLog:
     """An LSN-ordered log of parquet segment directories
-    ``{prefix}...-{from}-{to}``, each holding the disjoint range
-    ``(from, to]``: listing, suffix reads, consumers and retention,
-    shared by both publishers.  Subclasses set ``prefix``; ``_order``
-    is the segment sort key."""
+    ``{prefix}{from}-{to}``, each holding the disjoint range ``(from,
+    to]``.  The one owner of a topic's layout: naming, listing (always in
+    ``to`` order), publishing, suffix reads, consumers and retention."""
 
-    prefix: str
-
-    def __init__(self, spark, feed_dir: str):
+    def __init__(self, spark, feed_dir: str, prefix: str):
         self.spark = spark
         self.dir = os.path.abspath(feed_dir)
+        self.prefix = prefix
         os.makedirs(self.dir, exist_ok=True)
 
     @staticmethod
-    def _order(name: str):
-        return name
+    def _to(name: str) -> int:
+        return int(name.rsplit("-", 1)[1])
+
+    def _names(self) -> list[str]:
+        return sorted((d for d in os.listdir(self.dir)
+                       if d.startswith(self.prefix)), key=self._to)
 
     def segments(self, from_lsn: int | None = None) -> list[str]:
-        """Published segment paths in feed order, optionally pruned to
+        """Published segment paths in LSN order, optionally pruned to
         those whose encoded LSN range can contain events at or after
         ``from_lsn``."""
-        segs = sorted((d for d in os.listdir(self.dir)
-                       if d.startswith(self.prefix)), key=self._order)
-        if from_lsn is not None:
-            segs = [d for d in segs if int(d.rsplit("-", 1)[1]) >= from_lsn]
-        return [os.path.join(self.dir, d) for d in segs]
+        return [os.path.join(self.dir, d) for d in self._names()
+                if from_lsn is None or self._to(d) >= from_lsn]
 
     def published_to(self) -> int:
         """Highest LSN covered by a published segment (0 if none) — the
         frontier a :class:`FeedConsumer` can poll up to."""
-        return max((int(d.rsplit("-", 1)[1]) for d in os.listdir(self.dir)
-                    if d.startswith(self.prefix)), default=0)
+        names = self._names()
+        return self._to(names[-1]) if names else 0
+
+    def _publish(self, from_lsn: int, to_lsn: int, frame,
+                 keep=None) -> str | None:
+        """Publish the interval ``(from_lsn, to_lsn]`` clipped to what
+        lies past :meth:`published_to`, so a replay can never publish an
+        LSN twice; None when nothing is left.  ``frame(lo, hi)`` builds
+        the segment's rows for the clipped ``(lo, hi]``; the write is
+        staged to a dot-prefixed temp dir (invisible to Spark's reader)
+        and atomically renamed in, so a segment is all or nothing.  When
+        ``keep(tmp)`` is false the staged write is discarded instead."""
+        lo = max(from_lsn, self.published_to())
+        if to_lsn <= lo:
+            return None
+        seg = f"{self.prefix}{lo}-{to_lsn}"
+        tmp = os.path.join(self.dir, f".tmp-{seg}-{uuid.uuid4().hex[:8]}")
+        frame(lo, to_lsn).write.mode("overwrite").parquet(tmp)
+        if keep is not None and not keep(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
+        final = os.path.join(self.dir, seg)
+        os.rename(tmp, final)
+        return final
 
     def read(self, from_lsn: int | None = None,
              ordered: bool = True) -> DataFrame:
@@ -203,14 +192,14 @@ class _SegmentLog:
     def read_segmented(self, from_lsn: int | None = None):
         """Ordered full-history consumption WITHOUT the total sort.
 
-        Published segments hold disjoint half-open LSN ranges in
-        path-ordered sequence, so the feed's global ``(commit_lsn,
-        intent_seq)`` order factorizes: segment order × within-segment
-        order.  This yields ``(segment_path, DataFrame)`` pairs in feed
-        order, each frame sorted within its own segment — every sort is
-        bounded by one segment's size and NO cross-segment exchange
-        ever happens, the way a Kafka consumer drains partitions in
-        offset order rather than sorting the topic.  Drain pattern::
+        Published segments hold disjoint half-open LSN ranges listed in
+        LSN order, so the feed's global ``(commit_lsn, intent_seq)``
+        order factorizes: segment order × within-segment order.  This
+        yields ``(segment_path, DataFrame)`` pairs in feed order, each
+        frame sorted within its own segment — every sort is bounded by
+        one segment's size and NO cross-segment exchange ever happens,
+        the way a Kafka consumer drains partitions in offset order
+        rather than sorting the topic.  Drain pattern::
 
             for seg, df in feed.read_segmented():
                 apply(df)          # rows of df are ordered; segments
@@ -254,50 +243,54 @@ class _SegmentLog:
         return self._prune_below(frontier)
 
     def _prune_below(self, frontier: int) -> int:
-        return _prune_segments(self.dir, self.prefix, frontier)
+        """Remove segments whose ``to`` is ``<= frontier``, always
+        keeping the newest (its ``to`` is the ``published_to`` recovery
+        point — removing it would let a publisher restart republish from
+        0, duplicating the stream).  A directory walk on path-encoded
+        ranges, like ``BinlogSource.prune``; no Spark job."""
+        old = [d for d in self._names()[:-1] if self._to(d) <= frontier]
+        for d in old:
+            shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
+        return len(old)
 
 
 class FeedPublisher(_SegmentLog):
-    """Per-table feed: segment ``seg-{epoch:08d}-{from}-{to}`` holds one
-    applied batch's events."""
-
-    prefix = "seg-"
+    """Per-table feed: segment ``seg-{from}-{to}`` holds the envelope
+    records of the applied batches in ``(from, to]``."""
 
     def __init__(self, engine, feed_dir: str, tombstones: bool = True,
                  transaction_block: bool = False, heartbeats: bool = False,
                  **envelope_kwargs):
-        super().__init__(engine.spark, feed_dir)
+        super().__init__(engine.spark, feed_dir, "seg-")
         self.engine = engine
         self.tombstones = tombstones
         self.transaction_block = transaction_block
-        #: publish empty batches as heartbeat records on the sibling
-        #: heartbeat topic (``<feed_dir>-heartbeats``) — the reference
-        #: emits heartbeat-topic records so downstream liveness monitors
-        #: see idle ticks (Debezium core heartbeat wiring; idle probe
-        #: mirrors ``Db2StreamingChangeEventSource.java:147-152``)
-        self.heartbeats = heartbeats
-        self.hb_dir = self.dir + "-heartbeats"
+        #: with ``heartbeats=True`` empty batches become records on the
+        #: sibling heartbeat topic (``<feed_dir>-heartbeats``) — the
+        #: reference emits heartbeat-topic records so downstream liveness
+        #: monitors see idle ticks (Debezium core heartbeat wiring; idle
+        #: probe mirrors ``Db2StreamingChangeEventSource.java:147-152``)
+        self.hb = (_SegmentLog(self.spark, self.dir + "-heartbeats", "hb-")
+                   if heartbeats else None)
         self.envelope_kwargs = envelope_kwargs
 
     def _heartbeat(self, m) -> str | None:
-        if not self.heartbeats:
+        if self.hb is None:
             return None
-        os.makedirs(self.hb_dir, exist_ok=True)
-        seg = f"hb-{m.epoch:08d}-{m.to_lsn}"
-        final = os.path.join(self.hb_dir, seg)
-        if os.path.exists(final):
-            return None
-        hb = self.spark.range(1).selectExpr(
-            f"CAST({m.epoch} AS LONG) AS epoch",
-            f"CAST({m.to_lsn} AS LONG) AS lsn",
-            "'h' AS op")
-        return _publish_segment(self.hb_dir, seg, hb.coalesce(1))
+        # an interval whose events are already on the data feed is not
+        # idle: heartbeats publish only past both frontiers
+        return self.hb._publish(
+            max(m.from_lsn, self.published_to()), m.to_lsn,
+            lambda lo, hi: self.spark.range(1).selectExpr(
+                f"CAST({m.epoch} AS LONG) AS epoch",
+                f"CAST({hi} AS LONG) AS lsn", "'h' AS op").coalesce(1))
 
     def publish(self, m) -> str | None:
         """Publish one applied batch's envelope records; engine
-        ``on_batch`` hook.  Returns the segment path, or None for an
-        empty/already-published batch (empty batches become heartbeat
-        records when ``heartbeats=True``).
+        ``on_batch`` hook.  Publishes ``(max(m.from_lsn, published_to),
+        m.to_lsn]`` and returns the segment path, or None for an empty or
+        already-published batch (empty batches become heartbeat records
+        when ``heartbeats=True``).
 
         Replay-safe: ``m.events == 0`` is trusted only when the merge
         actually ran this call (``m.applied``).  A dedup-skipped replay
@@ -309,38 +302,29 @@ class FeedPublisher(_SegmentLog):
             # genuinely empty interval, observed by the merge that just
             # ran — no data segment to (re)publish
             return self._heartbeat(m)
-        seg = f"seg-{m.epoch:08d}-{m.from_lsn}-{m.to_lsn}"
-        final = os.path.join(self.dir, seg)
-        if os.path.exists(final):
-            return None  # replayed batch — already published (idempotent)
-        df = self.engine.export_envelope(
-            m.from_lsn + 1, m.to_lsn, tombstones=self.tombstones,
-            transaction_block=self.transaction_block,
-            **self.envelope_kwargs,
-        )
         # a replay of an interval that truly held no events (e.g. the
         # crashed batch itself was empty) is discarded — footer-metadata
         # check, no extra Spark job
-        return (_publish_segment(self.dir, seg, df,
-                                 keep=lambda tmp: _parquet_rows(tmp) > 0)
-                or self._heartbeat(m))
+        return self._publish(
+            m.from_lsn, m.to_lsn,
+            lambda lo, hi: self.engine.export_envelope(
+                lo + 1, hi, tombstones=self.tombstones,
+                transaction_block=self.transaction_block,
+                **self.envelope_kwargs),
+            keep=lambda tmp: _parquet_rows(tmp) > 0) or self._heartbeat(m)
 
     def _prune_below(self, frontier: int) -> int:
         # heartbeat segments below the frontier go too
-        removed = super()._prune_below(frontier)
-        if os.path.isdir(self.hb_dir):
-            removed += _prune_segments(self.hb_dir, "hb-", frontier)
-        return removed
+        return super()._prune_below(frontier) + (
+            self.hb._prune_below(frontier) if self.hb is not None else 0)
 
     def read_heartbeats(self) -> DataFrame:
-        """The heartbeat topic (epoch, lsn, op='h'), epoch-ordered."""
-        segs = sorted(
-            os.path.join(self.hb_dir, d) for d in os.listdir(self.hb_dir)
-            if d.startswith("hb-")
-        ) if os.path.isdir(self.hb_dir) else []
+        """The heartbeat topic (epoch, lsn, op='h'), LSN-ordered."""
+        segs = self.hb.segments() if self.hb is not None else []
         if not segs:
-            raise ValueError(f"{self.hb_dir} has no heartbeat segments")
-        return self.spark.read.parquet(*segs).orderBy("epoch")
+            raise ValueError(f"{self.dir}-heartbeats has no heartbeat "
+                             "segments")
+        return self.spark.read.parquet(*segs).orderBy("lsn")
 
 
 class FeedConsumer:
@@ -448,11 +432,11 @@ class MultiFeedPublisher(_SegmentLog):
     * the drain publishes the interval ``(published_to,
       min(table watermarks)]`` via ``export_envelope_multi`` — the
       cross-table envelope with commit-spanning transaction blocks;
-    * the segment path encodes the interval, and ``published_to`` is
-      recovered from the segment listing, so publishing is idempotent
-      under replays and resumes correctly after a restart (watermarks
-      re-derive from the engines' checkpoints — the same at-least-once
-      hook + idempotent-segment contract as the single-table publisher).
+    * ``published_to`` is recovered from the segment listing, so a
+      replay publishes nothing twice and a restart resumes where the
+      feed ends (watermarks re-derive from the engines' checkpoints —
+      the same at-least-once hook + publish-past-``published_to``
+      contract as the single-table publisher).
 
     Intervals are contiguous: every drained interval is written (an
     interval with no events across all tables becomes an empty segment)
@@ -460,25 +444,20 @@ class MultiFeedPublisher(_SegmentLog):
     is gap-free.  Segment ``mseg-{from}-{to}`` holds ``(from, to]``.
     """
 
-    prefix = "mseg-"
-
     def __init__(self, engines: dict, feed_dir: str,
                  tombstones: bool = True, transaction_block: bool = True,
                  **envelope_kwargs):
         if not engines:
             raise ValueError("MultiFeedPublisher needs at least one engine")
         self.engines = dict(engines)
-        super().__init__(next(iter(self.engines.values())).spark, feed_dir)
+        super().__init__(next(iter(self.engines.values())).spark, feed_dir,
+                         "mseg-")
         self.tombstones = tombstones
         self.transaction_block = transaction_block
         self.envelope_kwargs = envelope_kwargs
         #: in-memory applied positions (ahead of checkpoints inside the
         #: pre-checkpoint hook window); checkpoints are the floor
         self._applied: dict[str, int] = {}
-
-    @staticmethod
-    def _order(name: str):
-        return int(name.split("-")[1])
 
     def hook_for(self, table: str):
         """The ``on_batch`` hook for ``engines[table]``::
@@ -551,17 +530,11 @@ class MultiFeedPublisher(_SegmentLog):
             export_envelope_multi,
         )
 
-        frm = self.published_to()
-        to = self._watermark()
-        if to <= frm:
-            return []
-        seg = f"mseg-{frm}-{to}"
-        final = os.path.join(self.dir, seg)
-        if os.path.exists(final):
-            return []
-        df = export_envelope_multi(
-            self.engines, frm + 1, to, tombstones=self.tombstones,
-            transaction_block=self.transaction_block,
-            **self.envelope_kwargs,
-        )
-        return [_publish_segment(self.dir, seg, df)]
+        # from 0: _publish clips the interval at published_to
+        seg = self._publish(
+            0, self._watermark(),
+            lambda lo, hi: export_envelope_multi(
+                self.engines, lo + 1, hi, tombstones=self.tombstones,
+                transaction_block=self.transaction_block,
+                **self.envelope_kwargs))
+        return [seg] if seg is not None else []

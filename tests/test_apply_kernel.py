@@ -110,3 +110,34 @@ def test_merge_reads_the_manifest_once(spark, tmpdir_path, monkeypatch,
     assert len(reads) == 1
     assert_df_equal(eng.target.read(), oracle_final_state(snap, binlog),
                     PK_COLS)
+
+
+@pytest.mark.parametrize("merge_mode,versioned", [
+    ("cow", False), ("cow", True), ("mor", True)],
+    ids=["cow", "cow_versioned", "mor"])
+def test_merge_evaluates_the_change_plan_once(spark, tmpdir_path,
+                                              merge_mode, versioned):
+    """``merge_changes`` owns the caching of its change set: an uncached
+    100-row change plan is evaluated once per row, in every mode — a
+    counting UDF on the key column sees each row once."""
+    from pyspark.sql import functions as F
+
+    _snap, _binlog, eng = _snapshotted_engine(spark, tmpdir_path,
+                                              merge_mode, versioned)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(conv_id):
+        evals.add(1)
+        return conv_id
+
+    changes = spark.createDataFrame(
+        [("d" if i % 10 == 0 else "c", 10_000 + i, 0, f"conv-{i % 30}",
+          i // 30, "user", f"v{i}", None, None) for i in range(100)],
+        "op: string, commit_lsn: long, intent_seq: long, conv_id: string, "
+        "turn_idx: int, role: string, text: string, tool: string, "
+        "ts: timestamp",
+    ).withColumn("conv_id", counted("conv_id"))
+
+    assert eng.target.merge_changes(changes, PK_COLS, batch_id="counted")
+    assert evals.value == 100

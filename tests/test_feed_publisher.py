@@ -314,30 +314,13 @@ def test_feed_prune_retention_soak_with_lagging_consumer(spark, tmpdir_path):
         pub.prune()
 
 
-def test_read_segmented_orders_without_total_sort(spark, tmpdir_path):
-    """Full-history ordered consumption without the topic-wide sort:
-    segments are disjoint (from, to] LSN ranges in path order, so
-    concatenating per-segment-sorted frames reproduces read(ordered)
-    exactly — and no per-segment plan contains an Exchange (the sort is
-    within the one segment's partitions)."""
-    rows = [_row(l, s, "I", f"c{l}", s, f"t{l}{s}")
-            for l in range(1, 9) for s in range(2)]
-    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=2)
-    src.write(spark.createDataFrame(rows, BINLOG_SCHEMA))
-    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
-                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)
-    eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"),
-                    max_lsns_per_batch=2)
-    pub = FeedPublisher(eng, os.path.join(tmpdir_path, "feed"))
-    eng.run_available(on_batch=pub.publish)
-    assert len(pub.segments()) >= 3
-
+def _assert_segmented_matches_read(pub, n_rows):
     want = [(r.commit_lsn, r.intent_seq) for r in pub.read().collect()]
     got, seen_paths = [], []
     for seg, df in pub.read_segmented():
         seen_paths.append(seg)
         got.extend((r.commit_lsn, r.intent_seq) for r in df.collect())
-    assert got == want and len(got) == len(rows)
+    assert got == want and len(got) == n_rows
     assert seen_paths == pub.segments()
 
     # suffix read honors from_lsn on segment pruning AND row filtering
@@ -346,3 +329,85 @@ def test_read_segmented_orders_without_total_sort(spark, tmpdir_path):
     for _seg, df in pub.read_segmented(from_lsn=cut):
         suffix.extend((r.commit_lsn, r.intent_seq) for r in df.collect())
     assert suffix == [p for p in want if p[0] >= cut]
+
+
+def test_read_segmented_orders_without_total_sort(spark, tmpdir_path):
+    """Full-history ordered consumption without the topic-wide sort:
+    segments are disjoint (from, to] LSN ranges in path order, so
+    concatenating per-segment-sorted frames reproduces read(ordered)
+    exactly — and no per-segment plan contains an Exchange (the sort is
+    within the one segment's partitions).  A blocking snapshot resets
+    the batch epoch mid-feed; the segment order must still be LSN
+    order."""
+    from debezium_connector_db2_spark.streaming.signals import SignalChannel
+
+    rows = [_row(l, s, "I", f"c{l}", s, f"t{l}{s}")
+            for l in range(1, 9) for s in range(2)]
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=2)
+    src.write(spark.createDataFrame(rows, BINLOG_SCHEMA))
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)
+    signals = SignalChannel(os.path.join(tmpdir_path, "sig"))
+    eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"),
+                    max_lsns_per_batch=2, signals=signals,
+                    snapshot_source=t.read)
+    pub = FeedPublisher(eng, os.path.join(tmpdir_path, "feed"))
+    eng.run_available(on_batch=pub.publish)
+    assert len(pub.segments()) >= 3
+    _assert_segmented_matches_read(pub, len(rows))
+
+    # epoch reset: the blocking snapshot restarts batch epochs at the
+    # current LSN, and the next drain publishes (8, 16] from epoch 1
+    signals.send("execute-snapshot", {"type": "blocking"})
+    eng.run_available(on_batch=pub.publish)
+    assert eng.checkpoint.read().epoch == 0
+    more = [_row(l, s, "I", f"c{l}", s, f"t{l}{s}")
+            for l in range(9, 17) for s in range(2)]
+    src.write(spark.createDataFrame(more, BINLOG_SCHEMA))
+    eng.run_available(on_batch=pub.publish)
+    assert pub.published_to() == 16
+    _assert_segmented_matches_read(pub, len(rows) + len(more))
+
+
+def test_replay_wider_than_published_batch_adds_no_overlap(spark,
+                                                          tmpdir_path):
+    """A batch publishes, then the process dies before its checkpoint;
+    the log grows and the replayed batch covers a wider interval.  The
+    replay publishes only what lies past the published frontier: every
+    event appears once, and the segments hold disjoint LSN ranges in
+    order."""
+    from tests.conftest import SimulatedCrash
+
+    import pytest
+
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=2)
+    src.write(spark.createDataFrame(
+        [_row(1, 0, "I", "a", 0, "x"), _row(2, 0, "I", "b", 0, "y")],
+        BINLOG_SCHEMA))
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=2)
+    eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"))
+    pub = FeedPublisher(eng, os.path.join(tmpdir_path, "feed"))
+
+    def publish_then_crash(m):
+        pub.publish(m)
+        raise SimulatedCrash(m.epoch)
+
+    with pytest.raises(SimulatedCrash):
+        eng.run_available(on_batch=publish_then_crash)
+    assert pub.published_to() == 2 and eng.checkpoint.read().commit_lsn == 0
+
+    src.write(spark.createDataFrame(
+        [_row(3, 0, "U", "a", 0, "x2"), _row(4, 0, "I", "c", 0, "z")],
+        BINLOG_SCHEMA))
+    eng2 = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"))
+    eng2.run_available(on_batch=pub.publish)
+    assert pub.published_to() == 4
+
+    got = [(r.commit_lsn, r.intent_seq) for r in pub.read().collect()]
+    assert len(got) == len(set(got))
+    assert [lsn for lsn, _ in got] == [1, 2, 3, 4]
+    # segment by segment: disjoint ranges, in LSN order
+    flat = [r.commit_lsn for _seg, df in pub.read_segmented()
+            for r in df.collect()]
+    assert flat == [1, 2, 3, 4]
