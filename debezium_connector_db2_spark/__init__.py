@@ -15,8 +15,9 @@ re-expressed Spark-first:
   snapshot-versioned parquet lake table (mini-Iceberg: atomic manifest
   commits, schema evolution, batch-id idempotence);
 * offsets (``Db2OffsetContext.java:66-80``) become a checkpointed
-  ``(commit_lsn, intent_seq)`` position plus epoch and last batch id,
-  and one lineage row per applied batch.
+  ``(commit_lsn, intent_seq)`` position plus epoch and last batch id;
+  the same checkpoint carries the running batch counters
+  (``IBMSNAP_CAPMON``), so each applied batch has one record.
 
 Everything is DataFrame-native; Python touches data only through
 Arrow-vectorized pandas UDFs (never per-row).

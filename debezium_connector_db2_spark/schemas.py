@@ -9,8 +9,7 @@ Mirrors the reference's data model (SURVEY.md §1):
   columns, reference ``asncdcaddremove.sql:77-105``) rendered Spark-native
   with monotonic BIGINT LSNs (``Lsn.java:21-181`` ordering semantics are
   preserved: unsigned total order, NULL lowest);
-* registry / lineage / schema-history control tables
-  (``IBMSNAP_REGISTER`` / offset map / ``IBMQREP_TABVERSION``).
+* the capture-registry control table (``IBMSNAP_REGISTER``).
 """
 
 from __future__ import annotations
@@ -65,23 +64,6 @@ LSN_BUCKET_COL = "lsn_bucket"
 DEFAULT_LSN_BUCKET_SIZE = 1 << 16
 
 # ---------------------------------------------------------------------------
-# Change-event envelope (after classification/pairing): before/after structs
-# + canonical Debezium op codes c/u/d/r (``Db2ChangeRecordEmitter.java:39-78``,
-# envelope asserted by ``SourceInfoTest.java:86-104``).
-# ---------------------------------------------------------------------------
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("commit_lsn", T.LongType(), False),
-        T.StructField("intent_seq", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),  # 'c' | 'u' | 'd' | 'r'
-        T.StructField("table", T.StringType(), False),
-        T.StructField("schema_version", T.IntegerType(), False),
-        T.StructField("before", T.StructType(TRANSCRIPT_FIELDS), True),
-        T.StructField("after", T.StructType(TRANSCRIPT_FIELDS), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # Control tables (FIXTURES.md §3).
 # ---------------------------------------------------------------------------
 CAPTURE_REGISTRY_SCHEMA = T.StructType(
@@ -92,23 +74,5 @@ CAPTURE_REGISTRY_SCHEMA = T.StructType(
         T.StructField("stop_lsn", T.LongType(), True),
         T.StructField("schema_version", T.IntegerType(), False),
         T.StructField("state", T.StringType(), False),  # 'A' active | 'I' inactive
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch", T.LongType(), False),
-        T.StructField("max_applied_lsn", T.LongType(), True),
-        T.StructField("event_count", T.LongType(), False),
-        T.StructField("watermark", T.TimestampType(), True),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
-SCHEMA_HISTORY_SCHEMA = T.StructType(
-    [
-        T.StructField("version", T.IntegerType(), False),
-        T.StructField("effective_lsn", T.LongType(), False),
-        T.StructField("schema_json", T.StringType(), False),
     ]
 )

@@ -1,1 +1,2 @@
-"""Micro-batch orchestration: engine loop, checkpoints, lineage."""
+"""Micro-batch orchestration: engine loop, checkpoints (one record per
+applied batch), event feed, signals and notifications."""

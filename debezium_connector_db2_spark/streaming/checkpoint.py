@@ -8,6 +8,14 @@ The position is ``(commit_lsn, intent_seq)`` — exact, so restart filtering
 batch links the checkpoint to the lake table's idempotent commit record,
 closing the crash window between sink commit and checkpoint write
 (SURVEY.md §7 "what's hard").
+
+The offset is also the engine's one record of its applied batches: it
+carries the running counters ``CdcEngine.metrics`` reports (the
+reference's ``IBMSNAP_CAPMON`` monitoring row), and they advance in the
+same atomic write as the position.  A batch whose checkpoint was never
+written has counted nothing, so its replay counts it once.  An
+``offset.json`` written before the counters existed loads with them
+zeroed.
 """
 
 from __future__ import annotations
@@ -26,6 +34,13 @@ class Offset:
     epoch: int = 0
     snapshot_completed: bool = False
     last_batch_id: str | None = None
+    #: running totals over the applied batches: keys applied, highest
+    #: applied commit LSN, max event ``ts`` (epoch microseconds) and the
+    #: highest epoch that applied a key
+    events_applied: int = 0
+    max_applied_lsn: int | None = None
+    watermark: int | None = None
+    last_epoch: int | None = None
 
 
 class Checkpoint:

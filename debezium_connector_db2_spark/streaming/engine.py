@@ -12,7 +12,7 @@ Spark rendering of the reference's coordinator + streaming loop
   positions (F2/F3), normalize the capture rows to the target's current
   shape (``normalize_changes``), dedup last-writer-wins (A4), MERGE into
   the lake table (J5) with a deterministic batch id (exactly-once, T4),
-  append one lineage row for the batch, advance the checkpoint.
+  advance the checkpoint — position and running counters in one write.
 * schema changes         — configured ``SchemaChange``s and the DDL
   carried by the registry's new capture instances (S8), looked up in one
   place (``_switches``): a batch never crosses a switch, and the DDL runs
@@ -27,7 +27,9 @@ covering the same events; the MERGE is last-writer-wins per key, so
 re-applying an already-applied prefix together with newer events yields
 the same final state, and an *identical* recomputed batch is skipped
 outright by its batch id; DDL is idempotent, so a replayed switch re-runs
-as a no-op.  The tests reach that window through the ``on_batch`` hook,
+as a no-op.  The batch counters ride in the checkpoint, so the crashed
+batch counted nothing and its replay — wider or identical — counts it
+once.  The tests reach that window through the ``on_batch`` hook,
 which runs after the MERGE commits and before the checkpoint write.  The
 reference reaches the same guarantee serially via per-record offsets +
 event serial numbers (``Db2OffsetContext.java:66-104``,
@@ -36,19 +38,18 @@ event serial numbers (``Db2OffsetContext.java:66-104``,
 
 from __future__ import annotations
 
-import datetime
 import logging
 import os
 from dataclasses import dataclass, field, replace
 from typing import Any, Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.operators.classify import to_change_events
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
 from debezium_connector_db2_spark.operators.filters import after_position
-from debezium_connector_db2_spark.schemas import LINEAGE_SCHEMA, PK_COLS
+from debezium_connector_db2_spark.schemas import PK_COLS
 from debezium_connector_db2_spark.sources.binlog import BinlogSource
 from debezium_connector_db2_spark.streaming.checkpoint import (
     Checkpoint,
@@ -57,6 +58,11 @@ from debezium_connector_db2_spark.streaming.checkpoint import (
 )
 
 _log = logging.getLogger(__name__)
+
+
+def _max(a, b):
+    """``max`` of two optional values; None is no value."""
+    return b if a is None else a if b is None else max(a, b)
 
 
 def rename_map(target: LakeTable, manifest: dict | None = None) -> dict[str, str]:
@@ -176,8 +182,6 @@ class CdcEngine:
         self.max_lsns_per_batch = max_lsns_per_batch
         self.schema_changes = sorted(schema_changes, key=lambda c: c.effective_lsn)
         self.checkpoint = Checkpoint(checkpoint_dir)
-        self.lineage_dir = os.path.join(os.path.abspath(checkpoint_dir),
-                                        "lineage")
         self.registry = registry
         #: optional vectorized transform applied to the flat change rows
         #: before dedup+merge — e.g. the F7 column mask/hash/truncate
@@ -315,8 +319,9 @@ class CdcEngine:
         self._notify("Initial Snapshot", "STARTED", {"mode": mode})
         if mode == "no_data":
             snapshot_lsn = self.binlog.max_lsn() or 0
-            off = Offset(commit_lsn=snapshot_lsn, intent_seq=2**62, epoch=0,
-                         snapshot_completed=True, last_batch_id="no-data-snapshot")
+            off = replace(off, commit_lsn=snapshot_lsn, intent_seq=2**62,
+                          epoch=0, snapshot_completed=True,
+                          last_batch_id="no-data-snapshot")
             self.checkpoint.write(off)
             self._notify("Initial Snapshot", "COMPLETED",
                          {"mode": mode, "snapshot_lsn": snapshot_lsn})
@@ -340,8 +345,8 @@ class CdcEngine:
             # replayed pre-snapshot change can never clobber them
             position=(snapshot_lsn, 2**62),
         )
-        off = Offset(commit_lsn=snapshot_lsn, intent_seq=2**62, epoch=0,
-                     snapshot_completed=True, last_batch_id=batch_id)
+        off = replace(off, commit_lsn=snapshot_lsn, intent_seq=2**62, epoch=0,
+                      snapshot_completed=True, last_batch_id=batch_id)
         self.checkpoint.write(off)
         self._notify("Initial Snapshot", "COMPLETED",
                      {"mode": mode, "snapshot_lsn": snapshot_lsn})
@@ -609,7 +614,11 @@ class CdcEngine:
         materialized by the MERGE itself (which caches it where it reads
         it more than once); the batch's stats (events read, keys applied,
         max LSN, watermark) ride on ``Observation``s of that same plan,
-        so the lineage row costs no job.
+        so they cost no job.  The keys, max LSN and watermark join the
+        offset's running counters, written with the new position in the
+        one checkpoint write.  A replay whose MERGE is skipped by its
+        batch id (the crash left the lake one batch ahead) recomputes
+        them with one aggregate job, so the batch counts exactly once.
 
         ``on_batch`` runs *after* the merge commits but *before* the
         checkpoint write: a crash (or hook failure) between the two
@@ -637,14 +646,12 @@ class CdcEngine:
         read = Observation()
         flat = flat.observe(read, F.count(F.lit(1)).alias("events"))
         kept = Observation()
+        stat_cols = (F.count(F.lit(1)).alias("keys"),
+                     F.max("commit_lsn").alias("max_lsn"),
+                     F.unix_micros(F.max("ts")).alias("watermark"))
         changes = latest_per_key(
             flat, self.pk_cols, ("commit_lsn", "intent_seq"),
-        ).observe(
-            kept,
-            F.count(F.lit(1)).alias("keys"),
-            F.max("commit_lsn").alias("max_lsn"),
-            F.unix_micros(F.max("ts")).alias("watermark"),
-        )
+        ).observe(kept, *stat_cols)
         epoch = off.epoch + 1
         batch_id = f"cdc-{self.table}-{off.commit_lsn}-{off.intent_seq}-{to_lsn}"
         n_events = n_keys = 0
@@ -658,68 +665,36 @@ class CdcEngine:
             n_events = read.get["events"]
             stats = kept.get
             n_keys = stats["keys"]
-            if n_keys:
-                self._save_lineage(epoch, stats["max_lsn"], n_keys,
-                                   stats["watermark"])
+        else:  # identical replay: the crash lost the counters, not the MERGE
+            stats = changes.agg(*stat_cols).first().asDict()
+        if stats["keys"]:
+            off = replace(
+                off, events_applied=off.events_applied + stats["keys"],
+                max_applied_lsn=_max(off.max_applied_lsn, stats["max_lsn"]),
+                watermark=_max(off.watermark, stats["watermark"]),
+                last_epoch=_max(off.last_epoch, epoch))
 
         m = BatchMetrics(epoch, off.commit_lsn, to_lsn, n_events, n_keys,
                          applied)
         if on_batch is not None:
             on_batch(m)  # pre-checkpoint: crash here -> batch replays
-        self.checkpoint.write(Offset(
-            commit_lsn=to_lsn, intent_seq=2**62, epoch=epoch,
-            snapshot_completed=off.snapshot_completed, last_batch_id=batch_id,
-        ))
+        self.checkpoint.write(replace(off, commit_lsn=to_lsn, intent_seq=2**62,
+                                      epoch=epoch, last_batch_id=batch_id))
         return m
 
-    def _save_lineage(self, epoch: int, max_applied_lsn: int | None,
-                      event_count: int, watermark_us: int | None) -> None:
-        """Append one ``LINEAGE_SCHEMA`` row — the reference's offset map +
-        CAPMON counters, FIXTURES.md §3 — written directly with pyarrow:
-        a Spark job for one row would cost more than the row is worth."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        row = {
-            "epoch": epoch, "max_applied_lsn": max_applied_lsn,
-            "event_count": event_count, "watermark": watermark_us,
-            "committed_at": datetime.datetime.now(datetime.timezone.utc),
-        }
-        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        pq.write_table(
-            table,
-            os.path.join(self.lineage_dir, f"part-{uuid.uuid4().hex}.parquet"),
-        )
-
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_dir)
-
     def metrics(self) -> dict:
-        """A5 monitoring summary off the lineage table + checkpoint — the
-        reference's CAPMON counters (rows processed, position, last
-        activity) as one dict."""
+        """A5 monitoring summary — the reference's CAPMON counters (rows
+        processed, position, last activity) as one dict, read off the
+        checkpoint that ``apply_batch`` advances them in.  No Spark job;
+        the cost does not grow with the number of batches.  A fresh
+        engine reports zeros.  ``watermark`` is a ``datetime``, as a
+        collected timestamp column renders it."""
         off = self.checkpoint.read()
-        if not os.path.exists(self.lineage_dir):
-            # fresh engine: nothing applied, no heartbeat yet — report
-            # zeros rather than crash exactly when there's nothing to say
-            row = {"events_applied": 0, "max_applied_lsn": None,
-                   "watermark": None, "last_epoch": None}
-        else:
-            row = self.lineage().agg(
-                F.sum("event_count").alias("events_applied"),
-                F.max("max_applied_lsn").alias("max_applied_lsn"),
-                F.max("watermark").alias("watermark"),
-                F.max("epoch").alias("last_epoch"),
-            ).collect()[0]
         return {
-            "events_applied": row["events_applied"] or 0,
-            "max_applied_lsn": row["max_applied_lsn"],
-            "watermark": row["watermark"],
-            "last_epoch": row["last_epoch"],
+            "events_applied": off.events_applied,
+            "max_applied_lsn": off.max_applied_lsn,
+            "watermark": T.TimestampType().fromInternal(off.watermark),
+            "last_epoch": off.last_epoch,
             "checkpoint_lsn": off.commit_lsn,
             "epoch": off.epoch,
             "snapshot_completed": off.snapshot_completed,
@@ -792,8 +767,7 @@ class CdcEngine:
     def export_events(self, from_lsn: int, to_lsn: int,
                       tombstones: bool = True,
                       transaction_markers: bool = False,
-                      with_key: bool = False,
-                      heartbeats: bool = False) -> DataFrame:
+                      with_key: bool = False) -> DataFrame:
         """Canonical change-event feed for an LSN interval: the full
         classify+pair path (J3/J4) producing c/u/d/r envelopes with
         before/after images — what the reference publishes per-table to
@@ -811,15 +785,7 @@ class CdcEngine:
 
         ``with_key=True`` adds a ``key`` struct of the PK columns (the
         Kafka record key) — present on tombstone rows too, whose payloads
-        are null: a tombstone is key + null value.
-
-        ``heartbeats=True`` makes an *empty* interval yield one op='h'
-        record at position (to_lsn, 0) instead of zero rows — the
-        reference's heartbeat topic records, which keep downstream
-        liveness monitors fed while the source is idle (Debezium core
-        heartbeat wiring; the idle probe itself mirrors
-        ``Db2StreamingChangeEventSource.java:147-152``).  Costs one
-        isEmpty() probe on the feed."""
+        are null: a tombstone is key + null value."""
         payload_cols = self.payload_cols()
         raw = table_rows(self.binlog.read_range(from_lsn, to_lsn),
                          self.table, self.target)
@@ -862,7 +828,7 @@ class CdcEngine:
                         F.col("e.after").alias("after"))
             )
         if not transaction_markers:
-            return self._with_heartbeat(feed, to_lsn) if heartbeats else feed
+            return feed
         # per-tx BEGIN/END, counting *data* events (tombstones excluded,
         # as the reference counts dispatched change events)
         data = feed.where(F.col("op") != "t")
@@ -889,25 +855,7 @@ class CdcEngine:
 
         begin = marker("begin", -1, F.lit(None).cast("long"))
         end = marker("end", 2 ** 62, F.col("event_count"))
-        feed = feed.unionByName(begin).unionByName(end)
-        return self._with_heartbeat(feed, to_lsn) if heartbeats else feed
-
-    def _with_heartbeat(self, feed: DataFrame, to_lsn: int) -> DataFrame:
-        """If ``feed`` is empty, one op='h' record at (to_lsn, 0) with
-        nulls in every other slot, same schema as the feed."""
-        if not feed.isEmpty():
-            return feed
-        fixed = {
-            "commit_lsn": F.lit(to_lsn).cast("long"),
-            "intent_seq": F.lit(0).cast("long"),
-            "op": F.lit("h"),
-            "table": F.lit(self.table),
-        }
-        return self.spark.range(1).select(*[
-            (fixed[f.name] if f.name in fixed
-             else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in feed.schema.fields
-        ])
+        return feed.unionByName(begin).unionByName(end)
 
     def export_envelope(self, from_lsn: int, to_lsn: int,
                         tombstones: bool = True,

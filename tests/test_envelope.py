@@ -1,7 +1,6 @@
 """Full Debezium record envelope: nested ``source`` struct with the golden
 field set/order (``Db2SourceInfoStructMaker.java:19-51``, asserted by
-``SourceInfoTest.java:86-104``), key+null-value tombstones, and op='h'
-heartbeat records for empty LSN intervals."""
+``SourceInfoTest.java:86-104``) and key+null-value tombstones."""
 
 import datetime
 import os
@@ -94,23 +93,6 @@ def test_tombstone_is_key_plus_null_envelope(spark, tmpdir_path):
     d = next(r for r in rows if r.envelope is not None and r.envelope.op == "d")
     assert d.envelope.before.text == "hello" and d.envelope.after is None
     assert d.key.conv_id == "a"
-
-
-def test_heartbeat_record_on_empty_interval(spark, tmpdir_path):
-    eng = _engine(spark, tmpdir_path)
-    # beyond the max LSN: no change rows — one heartbeat instead
-    hb = eng.export_events(100, 200, heartbeats=True).collect()
-    assert len(hb) == 1
-    assert hb[0].op == "h"
-    assert hb[0].commit_lsn == 200 and hb[0].intent_seq == 0
-    assert hb[0].before is None and hb[0].after is None
-    # a non-empty interval is unaffected by the flag
-    got = eng.export_events(1, 3, heartbeats=True)
-    assert got.where(got.op == "h").count() == 0
-    # markers + key variant also supports heartbeats
-    hb2 = eng.export_events(100, 200, heartbeats=True, with_key=True,
-                            transaction_markers=True).collect()
-    assert [r.op for r in hb2] == ["h"]
 
 
 def test_transaction_block_orders(spark, tmpdir_path):

@@ -16,7 +16,7 @@ from debezium_connector_db2_spark.sources.generator import (
 )
 from debezium_connector_db2_spark.streaming.engine import CdcEngine
 
-from tests.conftest import assert_df_equal
+from tests.conftest import assert_df_equal, jobs_in_group
 
 TS = datetime.datetime(2026, 1, 1)
 
@@ -76,7 +76,7 @@ def test_engine_maintain_housekeeping(spark, tmpdir_path):
 
 def test_metrics_on_fresh_engine_returns_zeros(spark, tmpdir_path):
     """A fresh engine (no batch or heartbeat yet) must report zeros, not
-    crash on the missing lineage dir."""
+    crash on the missing checkpoint."""
     import os
 
     from debezium_connector_db2_spark.lake import LakeTable
@@ -92,3 +92,38 @@ def test_metrics_on_fresh_engine_returns_zeros(spark, tmpdir_path):
     assert m["events_applied"] == 0
     assert m["max_applied_lsn"] is None and m["last_epoch"] is None
     assert m["paused"] is False
+
+
+def test_metrics_is_a_checkpoint_read(spark, tmpdir_path):
+    """``metrics()`` reads the counters off the checkpoint: after several
+    batches it submits no Spark job, and a blocking snapshot (``mode=
+    "always"``), which resets the epoch, keeps the totals."""
+    snap = generate_snapshot(spark, n_convs=20, turns_per_conv=4, seed=3)
+    binlog = generate_binlog(spark, n_ops=200, n_convs=20, turns_per_conv=4,
+                             seed=3)
+    src = BinlogSource(spark, os.path.join(tmpdir_path, "bl"), bucket_size=8)
+    src.write(binlog)
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=4)
+    t.overwrite(snap, batch_id="snapshot")
+    eng = CdcEngine(spark, src, t, os.path.join(tmpdir_path, "ck"),
+                    max_lsns_per_batch=5)
+    assert len(eng.run_available()) >= 3
+
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-read", "metrics")
+    try:
+        m = eng.metrics()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs_in_group(sc, "metrics-read") == set()
+    assert m["events_applied"] > 0 and m["last_epoch"] == m["epoch"]
+    assert m["max_applied_lsn"] == src.max_lsn()
+    assert isinstance(m["watermark"], datetime.datetime)
+
+    eng.snapshot_load(snap, mode="always")
+    after = eng.metrics()
+    assert after["epoch"] == 0 and after["snapshot_completed"]
+    totals = ("events_applied", "max_applied_lsn", "watermark", "last_epoch")
+    assert [after[k] for k in totals] == [m[k] for k in totals]

@@ -13,6 +13,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import functions as F
 
 from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.schemas import PK_COLS, TRANSCRIPT_SCHEMA
@@ -109,6 +110,67 @@ def test_rerun_after_completion_is_noop(spark, tmpdir_path):
     assert m["max_applied_lsn"] <= m["checkpoint_lsn"]
     assert m["snapshot_completed"] is False and m["paused"] is False
     assert m["last_epoch"] == m["epoch"]
+
+
+def _pipeline(spark, d, snap, binlog):
+    """A snapshotted 4-bucket table over a binlog holding ``binlog``;
+    returns (source, target, checkpoint dir)."""
+    src = BinlogSource(spark, os.path.join(d, "bl"), bucket_size=1 << 16)
+    src.write(binlog)
+    t = LakeTable.create(spark, os.path.join(d, "t"), TRANSCRIPT_SCHEMA,
+                         bucket_by="conv_id", n_buckets=4)
+    t.overwrite(snap, batch_id="snapshot")
+    return src, t, os.path.join(d, "ck")
+
+
+def _workload(spark):
+    """200 ops over 20 conversations (commit LSNs 1..25)."""
+    return (generate_snapshot(spark, n_convs=20, turns_per_conv=4, seed=3),
+            generate_binlog(spark, n_ops=200, n_convs=20, turns_per_conv=4,
+                            seed=3))
+
+
+def test_wider_replay_after_crash_counts_once(spark, tmpdir_path):
+    """A crash after batch 1's MERGE, then the log grows: the replay is
+    wider than the crashed batch, so its batch id is new and the MERGE
+    applies again.  The crashed batch's counters never reached the
+    checkpoint, so the keys count once — the replay's own."""
+    snap, binlog = _workload(spark)
+    mid = 12
+    src, t, ckpt = _pipeline(spark, tmpdir_path, snap,
+                             binlog.where(F.col("commit_lsn") <= mid))
+    with pytest.raises(SimulatedCrash):
+        CdcEngine(spark, src, t, ckpt).run_available(on_batch=crash_at(1))
+    src.write(binlog.where(F.col("commit_lsn") > mid))
+
+    eng = CdcEngine(spark, src, t, ckpt)
+    batches = eng.run_available()
+    assert [m.applied for m in batches] == [True]
+    m = eng.metrics()
+    assert m["events_applied"] == sum(b.keys for b in batches)
+    assert m["max_applied_lsn"] == src.max_lsn()
+    assert_df_equal(t.read(), oracle_final_state(snap, binlog), PK_COLS)
+
+
+def test_identical_replay_after_crash_counts_once(spark, tmpdir_path):
+    """A replay identical to the crashed batch is skipped by its batch id
+    and recomputes the counters the crash lost: ``metrics()`` reads the
+    same as on a crash-free run over the same log."""
+    snap, binlog = _workload(spark)
+    src, t, ckpt = _pipeline(spark, os.path.join(tmpdir_path, "crash"),
+                             snap, binlog)
+    with pytest.raises(SimulatedCrash):
+        CdcEngine(spark, src, t, ckpt,
+                  max_lsns_per_batch=5).run_available(on_batch=crash_at(2))
+    eng = CdcEngine(spark, src, t, ckpt, max_lsns_per_batch=5)
+    assert not eng.run_available()[0].applied   # the replayed batch 2
+
+    src2, t2, ckpt2 = _pipeline(spark, os.path.join(tmpdir_path, "clean"),
+                                snap, binlog)
+    clean = CdcEngine(spark, src2, t2, ckpt2, max_lsns_per_batch=5)
+    clean.run_available()
+    assert clean.metrics()["events_applied"] > 0
+    assert eng.metrics() == clean.metrics()
 
 
 

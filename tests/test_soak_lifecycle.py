@@ -1,8 +1,7 @@
 """Long-running-lifecycle soak: many append→drain cycles with interleaved
 maintenance (compact/vacuum/expire), an incremental-snapshot signal, and a
 mid-life crash — the table must converge to the closed-form oracle after
-every cycle and stay healthy (bounded manifests, no duplicate columns,
-lineage complete)."""
+every cycle and stay healthy (bounded manifests, no duplicate columns)."""
 
 import os
 
