@@ -115,6 +115,12 @@ class LakeTable:
         by ``vacuum_tombstones``) so they cannot be resurrected by late
         older updates.  The unversioned default relies on the engine
         feeding batches in LSN order (which ``CdcEngine`` guarantees).
+        It stays the default because it is cheaper at scale: its MERGE
+        anti-joins the stored rows with the batch keys, where the
+        versioned one aggregates stored rows and changes per key and
+        keeps tombstones — the CDC replay of 9.1 M events on 4 cores
+        took a median 36.9 s unversioned against 43.4 s versioned
+        (BASELINE.md, "One row model").
 
         ``merge_mode`` picks the MERGE physical strategy (Iceberg's
         ``write.merge.mode``):
@@ -197,15 +203,19 @@ class LakeTable:
         # the new version is fully visible.
         write_atomic(os.path.join(self.path, _VERSION_PTR), str(v))
 
+    def _versions(self) -> list[int]:
+        """Versions with a manifest on disk, ascending: one listing of
+        the manifest directory, so the cost follows the retained
+        manifests, not every version ever committed.  Includes a
+        manifest a crashed commit wrote past the current version."""
+        return sorted(int(n[1:-5]) for n in os.listdir(
+            os.path.join(self.path, _MANIFEST_DIR))
+            if n.startswith("v") and n.endswith(".json"))
+
     def history(self) -> list[dict]:
-        out = []
-        for v in range(self.current_version() + 1):
-            try:
-                m = self.manifest(v)
-            except FileNotFoundError:
-                continue  # expired by expire_snapshots
-            out.append({"version": v, "summary": m["summary"]})
-        return out
+        cur = self.current_version()
+        return [{"version": v, "summary": self.manifest(v)["summary"]}
+                for v in self._versions() if v <= cur]
 
     def changes_between(self, from_version: int,
                         to_version: int | None = None) -> DataFrame:
@@ -238,13 +248,11 @@ class LakeTable:
                              "(rows must carry their applied position)")
         to_v = (to_version if to_version is not None
                 else self.current_version())
-        for v in range(from_version + 1, to_v + 1):
-            try:
-                s = self.manifest(v)["summary"]
-            except FileNotFoundError:
-                continue        # expired manifest: vacuum state unknowable,
-                # but expiry already means the window isn't replayable
-            if s.get("operation") == "vacuum-tombstones":
+        # an expired manifest's vacuum state is unknowable, but expiry
+        # already means the window isn't replayable
+        for v in [v for v in self._versions() if from_version < v <= to_v]:
+            if self.manifest(v)["summary"].get("operation") == \
+                    "vacuum-tombstones":
                 raise ValueError(
                     f"changes_between({from_version}, {to_v}): a "
                     f"vacuum-tombstones commit at version {v} removed "
@@ -282,10 +290,7 @@ class LakeTable:
             for ents in self.manifest(v)["files"].values():
                 keep_files.update(e["path"] for e in ents)
         removed_files = removed_manifests = 0
-        for v in range(cutoff):
-            mpath = os.path.join(self.path, _MANIFEST_DIR, f"v{v}.json")
-            if not os.path.exists(mpath):
-                continue
+        for v in [v for v in self._versions() if v < cutoff]:
             for ents in self.manifest(v)["files"].values():
                 for e in ents:
                     if e["path"] in keep_files:
@@ -294,7 +299,7 @@ class LakeTable:
                     if os.path.exists(full):
                         os.remove(full)
                         removed_files += 1
-            os.remove(mpath)
+            os.remove(os.path.join(self.path, _MANIFEST_DIR, f"v{v}.json"))
             removed_manifests += 1
         return {"removed_manifests": removed_manifests,
                 "removed_files": removed_files,
@@ -943,11 +948,7 @@ class LakeTable:
         # the rewrite): cache it for the span of this MERGE only.
         changes = changes.persist()
         try:
-            # Manifest-level pruning: which buckets does this batch touch?
-            # Bounded by n_buckets, so the collect is tiny.
-            touched = [r["__bucket"] for r in changes.select(
-                bucket_expr(m["bucket_by"], m["n_buckets"]).alias("__bucket")
-            ).distinct().collect()]
+            touched = self._buckets_of(changes, m)
             if not touched:
                 self._commit_child(
                     dict(m), summary or {"operation": "merge", "empty": True},
@@ -980,6 +981,14 @@ class LakeTable:
         finally:
             changes.unpersist()
         return True
+
+    @staticmethod
+    def _buckets_of(df: DataFrame, m: dict) -> list[int]:
+        """Manifest-level pruning: the buckets ``df``'s rows fall in under
+        ``m``.  Bounded by n_buckets, so the collect is tiny."""
+        return [r["__bucket"] for r in df.select(
+            bucket_expr(m["bucket_by"], m["n_buckets"]).alias("__bucket")
+        ).distinct().collect()]
 
     def compact(self, max_files_per_bucket: int = 1) -> int:
         """Rewrite buckets whose file count exceeds the threshold (appends
@@ -1015,19 +1024,28 @@ class LakeTable:
         self._commit_rows(m, self._stored(rows, m),
                           {"operation": "rebucket", "n_buckets": n_buckets})
 
-    def vacuum_tombstones(self, before_lsn: int) -> None:
+    def vacuum_tombstones(self, before_lsn: int) -> int:
         """Physically drop tombstone rows older than ``before_lsn`` (safe
         once no batch at an older position can still arrive — i.e. the
-        engine's checkpoint has passed it).  Rewrites every bucket."""
+        engine's checkpoint has passed it).  Rewrites only the buckets
+        holding such a tombstone and commits nothing when none does (an
+        unversioned table holds none).  Returns the number of buckets
+        rewritten."""
         m = self.manifest()
         if not m.get("versioned", False):
-            return
-        kept = self._read(m, raw=True).where(
-            ~F.col("__deleted") | (F.col("__commit_lsn") >= before_lsn)
-        )
-        self._commit_rows(m, self._stored(kept, m),
-                          {"operation": "vacuum-tombstones",
-                           "before_lsn": before_lsn})
+            return 0
+        stale = F.coalesce(F.col("__deleted")
+                           & (F.col("__commit_lsn") < before_lsn),
+                           F.lit(False))
+        buckets = self._buckets_of(self._read(m, raw=True).where(stale), m)
+        if not buckets:
+            return 0
+        self._commit_rows(
+            m, self._stored(self._read(m, buckets, raw=True).where(~stale), m),
+            {"operation": "vacuum-tombstones", "before_lsn": before_lsn,
+             "buckets": len(buckets)},
+            replace=buckets)
+        return len(buckets)
 
 
 def _is_widening(old: T.DataType, new: T.DataType) -> bool:

@@ -18,11 +18,8 @@ Two strategies:
   scale path mandated by the north_rule's skew handling.  (Physically it
   compiles to SortAggregate — struct-valued buffers can't use the hash
   path — but the single exchange + ``partial_max_by`` is what matters;
-  benched ~3× faster than the window strategy.  Pinned by
-  tests/test_plans.py.)
-* ``window``: ``row_number() OVER (PARTITION BY pk ORDER BY pos DESC)=1``
-  — the literal W3 rendering (``ZOsPlatform.java:30``); simple, but a hot
-  key lands on one reducer.  Kept for parity testing and small batches.
+  benched ~3× faster than a ``row_number()`` window, which also lands a
+  hot key on one reducer.  Pinned by tests/test_plans.py.)
 * ``salted``: explicit two-phase with a synthetic salt — demonstrates the
   general technique for aggregates that lack map-side combine.
 """
@@ -31,7 +28,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from debezium_connector_db2_spark.schemas import PK_COLS
 
@@ -44,16 +41,10 @@ def latest_per_key(
     n_salts: int = 16,
 ) -> DataFrame:
     """One row per key: the row with max ``order_cols`` (lexicographic)."""
+    if strategy not in ("agg", "salted"):
+        raise ValueError(f"unknown dedup strategy {strategy!r}")
     other = [c for c in df.columns if c not in key_cols]
     pos = F.struct(*[F.col(c) for c in order_cols])
-
-    if strategy == "window":
-        w = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in order_cols])
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
 
     if strategy == "salted":
         # Phase 1: per (key, salt) partial winner; phase 2: resolve across

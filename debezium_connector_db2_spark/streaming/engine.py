@@ -740,10 +740,10 @@ class CdcEngine:
         engines) instead."""
         off = self.checkpoint.read()
         compacted = self.target.compact(max_files_per_bucket=compact_threshold)
-        if self.target.manifest().get("versioned", False):
-            self.target.vacuum_tombstones(before_lsn=off.commit_lsn)
+        vacuumed = self.target.vacuum_tombstones(before_lsn=off.commit_lsn)
         stats = self.target.expire_snapshots(keep_last=expire_keep_last)
         stats["compacted_buckets"] = compacted
+        stats["vacuumed_buckets"] = vacuumed
         if prune_source:
             stats["pruned_binlog_buckets"] = self.binlog.prune(
                 off.commit_lsn)

@@ -164,6 +164,30 @@ def test_expire_snapshots_gc(spark, tmpdir_path):
         < n_manifests_before
 
 
+def test_history_after_expiry_opens_only_retained_manifests(tmpdir_path,
+                                                            monkeypatch):
+    """``history()`` and ``expire_snapshots`` list the manifest directory
+    once: after 500 commits expired down to 5, ``history()`` opens the 5
+    retained manifests, not one per version ever committed."""
+    monkeypatch.setattr(os, "fsync", lambda fd: None)   # speed only
+    t = LakeTable.create(None, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id")
+    for i in range(500):
+        t._commit_child(t.manifest(), {"operation": "noop", "i": i})
+    assert t.expire_snapshots(keep_last=5)["removed_manifests"] == 496
+
+    opened = []
+    manifest = LakeTable.manifest
+
+    def counted(self, version=None):
+        opened.append(version)
+        return manifest(self, version)
+
+    monkeypatch.setattr(LakeTable, "manifest", counted)
+    assert [h["version"] for h in t.history()] == [496, 497, 498, 499, 500]
+    assert len(opened) == 5
+
+
 def test_batch_id_window_bounded(spark, tmpdir_path, monkeypatch):
     monkeypatch.setattr(LakeTable, "MAX_BATCH_IDS", 4)
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),

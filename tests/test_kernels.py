@@ -93,7 +93,7 @@ def test_dedup_strategies_agree(spark):
     df = _binlog(spark, rows).select("commit_lsn", "intent_seq", "op",
                                      "conv_id", "turn_idx", "text")
     expect = {("c", 0): "v3b", ("d", 0): "w1"}
-    for strat in ("agg", "window", "salted"):
+    for strat in ("agg", "salted"):
         got = {(r.conv_id, r.turn_idx): r.text
                for r in latest_per_key(df, ["conv_id", "turn_idx"],
                                        strategy=strat).collect()}

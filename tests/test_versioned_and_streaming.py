@@ -98,6 +98,22 @@ def test_versioned_delete_not_resurrected_by_late_old_update(
     assert _raw_rows(t) == {("x", 0, "dead", 5, True)}
 
 
+def test_vacuum_without_stale_tombstones_commits_nothing(spark, tmpdir_path):
+    """A vacuum with nothing to drop leaves the table at its version, so
+    a changelog read across it still works."""
+    t = _versioned_table(spark, os.path.join(tmpdir_path, "t"), "cow", 4)
+    t.merge_changes(_changes(spark, [_row(1, 0, "I", "a", 0, "v1"),
+                                     _row(1, 1, "I", "b", 0, "w1")]),
+                    PK_COLS, batch_id="b1")
+    v = t.current_version()
+    assert t.vacuum_tombstones(before_lsn=100) == 0
+    assert t.current_version() == v
+    t.merge_changes(_changes(spark, [_row(2, 0, "U", "a", 0, "v2")]),
+                    PK_COLS, batch_id="b2")
+    assert [(r.conv_id, r.op, r.text)
+            for r in t.changes_between(v).collect()] == [("a", "u", "v2")]
+
+
 def test_structured_streaming_replay(spark, tmpdir_path):
     snap = generate_snapshot(spark, n_convs=50, turns_per_conv=8, seed=21)
     binlog = generate_binlog(spark, n_ops=800, n_convs=50, turns_per_conv=8, seed=21)
