@@ -316,9 +316,9 @@ def q_cdc_merge_final_state_mor(spark, sf_dir):
     change log into a ``merge_mode='mor'`` LakeTable in three LSN-ordered
     batches — per-bucket delta-file appends, per-key
     ``(__commit_lsn, __intent_seq)`` resolution on read
-    (``lake._resolve_latest``) — with ``compact()`` after the second
-    batch, so one green row certifies both the delta-resolution read and
-    the post-compaction read.  The reference's replay contract: final
+    (``operators.dedup.latest_per_key``) — with ``compact()`` after the
+    second batch, so one green row certifies both the delta-resolution
+    read and the post-compaction read.  The reference's replay contract: final
     table state after applying the stream equals the oracle
     (``Db2ConnectorIT.java:549-714``)."""
     import atexit
@@ -2026,7 +2026,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "cdc_merge_final_state": _MERGE_FINAL_SQL,
         # Same replay contract, exercised through the actual
-        # merge-on-read lake path (delta appends + _resolve_latest +
+        # merge-on-read lake path (delta appends + latest_per_key +
         # compact) on the Spark side — the oracle is the same final
         # state the CoW row is held to.
         "cdc_merge_final_state_mor": _MERGE_FINAL_SQL,

@@ -53,10 +53,6 @@ def bpe_ish_token_count_sql(expr: str) -> str:
     )
 
 
-def char_len(col: Column) -> Column:
-    return F.length(col)
-
-
 def alpha_ratio(col: Column) -> Column:
     """Fraction of characters that are ascii letters or spaces."""
     kept = F.length(F.regexp_replace(col, r"[^A-Za-z ]", ""))

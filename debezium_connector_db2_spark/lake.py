@@ -46,6 +46,7 @@ from typing import Any, Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from debezium_connector_db2_spark.operators.dedup import latest_per_key
 from debezium_connector_db2_spark.streaming.checkpoint import write_atomic
 
 _MANIFEST_DIR = "_manifests"
@@ -767,30 +768,16 @@ class LakeTable:
             out = out.unionByName(p)
         if versioned and m.get("merge_mode", "cow") == "mor":
             # merge-on-read resolution: base + delta rows collapse to the
-            # per-key (__commit_lsn, __intent_seq) winner.  One shuffle on
-            # the key — the read-side half of the MoR tradeoff (writes
-            # became O(changes)); compact() folds deltas so steady-state
-            # reads pay it over one file per bucket.
-            out = self._resolve_latest(out, m["key_cols"], cols)
+            # per-key (__commit_lsn, __intent_seq) winner of the engine's
+            # one last-writer kernel.  One shuffle on the key — the
+            # read-side half of the MoR tradeoff (writes became
+            # O(changes)); compact() folds deltas so steady-state reads
+            # pay it over one file per bucket.
+            out = latest_per_key(out, m["key_cols"],
+                                 ("__commit_lsn", "__intent_seq"))
         if versioned and not raw:
             out = out.where(~F.coalesce(F.col("__deleted"), F.lit(False)))
         return out.select(out_cols)
-
-    @staticmethod
-    def _resolve_latest(df: DataFrame, key_cols: Sequence[str],
-                        cols: Sequence[str]) -> DataFrame:
-        """Per-key last-writer resolution over versioned rows: argmax on
-        ``(__commit_lsn, __intent_seq)``.  Shared by the merge-on-read
-        read and the versioned copy-on-write MERGE.  Exact position ties
-        (impossible from a correct engine, possible from hand-written
-        deltas) break deterministically on the remaining struct fields."""
-        ordered = VERSION_META_COLS + [c for c in cols if c not in key_cols]
-        return (
-            df.groupBy(*key_cols)
-            .agg(F.max(F.struct(*ordered)).alias("__w"))
-            .select(*key_cols,
-                    *[F.col("__w")[c].alias(c) for c in ordered])
-        )
 
     # -- write paths --------------------------------------------------------
 
@@ -924,10 +911,10 @@ class LakeTable:
 
         if m.get("merge_mode", "cow") == "mor":
             if list(key_cols) != list(m["key_cols"]):
-                # read-side _resolve_latest collapses under the manifest
-                # identity; a delta written under different keys would
-                # silently produce per-key results the caller never asked
-                # for — fail loudly instead.
+                # the read-side latest_per_key collapses under the
+                # manifest identity; a delta written under different keys
+                # would silently produce per-key results the caller never
+                # asked for — fail loudly instead.
                 raise ValueError(
                     f"merge_changes key_cols {list(key_cols)!r} != "
                     f"manifest key_cols {m['key_cols']!r} for a "
@@ -936,7 +923,7 @@ class LakeTable:
             # rows as per-bucket delta files — ONE write job proportional
             # to the batch, no read of existing data, no rewrite, no
             # driver-side probes.  Resolution happens on read
-            # (_resolve_latest); compact() folds deltas into the base.
+            # (latest_per_key); compact() folds deltas into the base.
             self._commit_rows(
                 m, self._stored(versioned_rows(changes), m),
                 summary or (lambda written: {"operation": "merge-delta",
@@ -957,13 +944,15 @@ class LakeTable:
 
             old = self._read(m, buckets=touched, raw=versioned)
             if versioned:
-                # Order-insensitive path: per-key argmax over (old rows ∪
-                # changes) on (__commit_lsn, __intent_seq); deletes become
-                # retained tombstone rows.  Safe under out-of-order batch
-                # delivery (e.g. a file-stream source), at the cost of
-                # storing tombstones until vacuum.
-                new_rows = self._resolve_latest(
-                    old.unionByName(versioned_rows(changes)), key_cols, cols)
+                # Order-insensitive path: the per-key latest_per_key
+                # winner over (old rows ∪ changes) on (__commit_lsn,
+                # __intent_seq); deletes become retained tombstone rows.
+                # Safe under out-of-order batch delivery (e.g. a
+                # file-stream source), at the cost of storing tombstones
+                # until vacuum.
+                new_rows = latest_per_key(
+                    old.unionByName(versioned_rows(changes)), key_cols,
+                    ("__commit_lsn", "__intent_seq"))
             else:
                 # Survivors: target rows whose key does NOT appear in the
                 # batch.  ``changes`` carries ≤1 row per key (A4 dedup ran

@@ -29,18 +29,8 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     return False
 
 
-def scans_partition_count(df: DataFrame) -> list[str]:
-    """The partition-filter lines of every scan in the plan."""
-    return [ln.strip() for ln in formatted_plan(df).splitlines()
-            if "PartitionFilters" in ln]
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
 
 
 def count_exchanges(df: DataFrame) -> int:
@@ -50,14 +40,6 @@ def count_exchanges(df: DataFrame) -> int:
         1 for ln in plan.splitlines()
         if ln.strip().startswith("+- Exchange") or ln.strip().startswith("Exchange")
     )
-
-
-def whole_stage_codegen_ids(df: DataFrame) -> set[int]:
-    """Distinct WholeStageCodegen spans (wider = fewer interpreter gaps)."""
-    import re
-
-    plan = formatted_plan(df)
-    return {int(m) for m in re.findall(r"WholeStageCodegen \((\d+)\)", plan)}
 
 
 def read_schema_columns(df: DataFrame) -> list[str]:

@@ -74,7 +74,7 @@ def main():
                         ("commit_lsn", "intent_seq"))
     sections.append((
         "A4 — last-writer-wins dedup (the apply kernel)",
-        "One exchange total; `partial_max_by` runs map-side, so a hot "
+        "One exchange total; `partial_max` runs map-side, so a hot "
         "conversation's rows crossing the shuffle are bounded by the "
         "partition count, not the key's frequency.",
         dd,

@@ -100,6 +100,34 @@ def test_dedup_strategies_agree(spark):
         assert got == expect, strat
 
 
+def test_dedup_position_tie_has_one_winner(spark, tmpdir_path):
+    """Two rows tied on key and position: the winner depends only on the
+    rows, not on their input order, for both strategies — and a
+    merge-on-read lake holding the same two rows as deltas reads back
+    that winner (one last-writer rule)."""
+    from debezium_connector_db2_spark.lake import LakeTable
+
+    rows = {v: _row(7, 0, "I", "c", 0, v) for v in "ab"}
+    cols = ("commit_lsn", "intent_seq", "op", "conv_id", "turn_idx", "text")
+    key = ["conv_id", "turn_idx"]
+    winners = {}
+    for order in ("ab", "ba"):
+        df = _binlog(spark, [rows[v] for v in order]).select(*cols).coalesce(1)
+        for strat in ("agg", "salted"):
+            [w] = latest_per_key(df, key, strategy=strat).collect()
+            winners[(order, strat)] = w.text
+    assert len(set(winners.values())) == 1, winners
+
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"),
+        df.drop("commit_lsn", "intent_seq", "op").schema, bucket_by="conv_id",
+        n_buckets=1, versioned=True, merge_mode="mor", key_cols=key)
+    for v in "ab":
+        t.merge_changes(_binlog(spark, [rows[v]]).select(*cols), key,
+                        batch_id=v)
+    assert [r.text for r in t.read().collect()] == [w.text]
+
+
 def test_position_and_range_filters(spark):
     df = _binlog(spark, [
         _row(1, 5, "I", "c", 0, "a"),

@@ -198,7 +198,7 @@ def test_mor_vacuum_drops_old_tombstones(spark, tmpdir_path):
 
 def test_mor_merge_rejects_mismatched_key_cols(spark, tmpdir_path):
     """merge_changes on a merge-on-read table must be called with the
-    manifest's key identity: read-side _resolve_latest collapses under
+    manifest's key identity: the read-side latest_per_key collapses under
     manifest key_cols, so a delta written under different keys would
     silently produce per-key results the caller never asked for."""
     t = _mor(spark, os.path.join(tmpdir_path, "t"))

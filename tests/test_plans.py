@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from debezium_connector_db2_spark.lake import LakeTable
 from debezium_connector_db2_spark.plans.checks import (
     count_exchanges,
     formatted_plan,
@@ -15,8 +16,12 @@ from debezium_connector_db2_spark.plans.checks import (
     has_pushed_filter,
     read_schema_columns,
 )
+from debezium_connector_db2_spark.schemas import PK_COLS, TRANSCRIPT_SCHEMA
 from debezium_connector_db2_spark.sources.binlog import BinlogSource
-from debezium_connector_db2_spark.sources.generator import generate_binlog
+from debezium_connector_db2_spark.sources.generator import (
+    generate_binlog,
+    generate_snapshot,
+)
 from debezium_connector_db2_spark.operators.dedup import latest_per_key
 
 SF = "/root/testdata/sf0.001"
@@ -63,12 +68,25 @@ def test_dedup_agg_single_exchange(spark):
     latest = latest_per_key(df, ["k"], ("commit_lsn", "intent_seq"))
     assert count_exchanges(latest) == 1, formatted_plan(latest)
     plan = formatted_plan(latest)
-    # max_by with a struct buffer compiles to SortAggregate (declarative
-    # agg with immutable buffer type) — the load-bearing property is the
-    # map-side partial_max_by before the single exchange: a hot key is
+    # max over a struct compiles to SortAggregate (struct-valued buffers
+    # can't use the hash path) — the load-bearing property is the
+    # map-side partial_max before the single exchange: a hot key is
     # pre-reduced inside every input partition, so the rows crossing the
     # wire per key are bounded by the partition count.
-    assert "partial_max_by" in plan, "expected map-side partial aggregation"
+    assert "partial_max(struct(" in plan, "expected map-side partial aggregation"
+
+
+def test_merge_on_read_read_single_exchange(spark, tmpdir_path):
+    """A merge-on-read read resolves base + delta files with the same
+    kernel: one exchange, whatever the number of files."""
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
+                         TRANSCRIPT_SCHEMA, bucket_by="conv_id", n_buckets=4,
+                         versioned=True, merge_mode="mor", key_cols=PK_COLS)
+    snap = generate_snapshot(spark, n_convs=10, turns_per_conv=3, seed=1)
+    t.overwrite(snap, position=(0, 0))
+    t.append(snap, position=(1, 0))    # a delta over every key
+    latest = t.read()
+    assert count_exchanges(latest) == 1, formatted_plan(latest)
 
 
 def test_media_native_decode_stays_jvm_side(spark):

@@ -188,8 +188,9 @@ def test_streaming_normalizes_renames_and_added_columns(spark, tmpdir_path,
     """Both frontends run one normalization: the lake's historized renames
     (a chain tool -> tool_name -> tool_id) map old- and mid-instance rows
     onto the current name, rows written before an int -> bigint ALTER are
-    up-cast, and target-only columns fill as NULL — identical final state
-    from ``CdcEngine`` and ``StreamingCdc``."""
+    up-cast, target-only columns fill as NULL, and a column the target
+    dropped but the capture files still carry is projected away —
+    identical final state from ``CdcEngine`` and ``StreamingCdc``."""
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                          TRANSCRIPT_SCHEMA, bucket_by="conv_id",
                          n_buckets=2, versioned=True)
@@ -198,9 +199,10 @@ def test_streaming_normalizes_renames_and_added_columns(spark, tmpdir_path,
     t.rename_column("tool_name", "tool_id")
     t.alter_column("n", "bigint")
     t.add_column("score", "double", default=0.5)
+    t.drop_column("role")
 
     # the capture files still carry `tool` (old instance) or `tool_name`
-    # (mid instance), and `n` as int
+    # (mid instance), `n` as int, and the dropped `role`
     schema = T.StructType(BINLOG_SCHEMA.fields + [
         T.StructField("tool_name", T.StringType(), True),
         T.StructField("n", T.IntegerType(), True),
@@ -225,6 +227,7 @@ def test_streaming_normalizes_renames_and_added_columns(spark, tmpdir_path,
     got = t.read()
     assert got.schema["n"].dataType == T.LongType()
     assert "tool" not in got.columns and "tool_name" not in got.columns
+    assert "role" not in got.columns
     assert {(r.conv_id, r.text, r.tool_id, r.n, r.score)
             for r in got.collect()} == {
         ("a", "hello-v2", "sed", 3, None),    # explicit NULL from new data
